@@ -199,6 +199,14 @@ object Bench {
     else BigDecimal(v).round(new java.math.MathContext(3))
       .bigDecimal.stripTrailingZeros.toPlainString
 
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** `s` as a JSON string literal, quoted and escaped: query names and the
+    * env-supplied paths reach the summary lines through here, so a `"` or
+    * `\` in them cannot break the JSON its readers parse.
+    */
+  private[graft] def jsonString(s: String): String = mapper.writeValueAsString(s)
+
   /** Per-query medians for the COMPACT final line, trimmed to a byte
     * budget: slowest queries first (they carry the perf signal), as many
     * entries as fit. Returns (mapJson, elidedCount).
@@ -219,12 +227,32 @@ object Bench {
     var n = 0
     var full = false
     for ((k, v) <- bySlowest if !full) {
-      val entry = (if (n == 0) "" else ",") + "\"" + k + "\":" + sig3(v)
+      val entry = (if (n == 0) "" else ",") + jsonString(k) + ":" + sig3(v)
       if (sb.length + entry.length + 1 > budget) full = true
       else { sb.append(entry); n += 1 }
     }
     sb.append("}")
     (sb.toString, med.size - n)
+  }
+
+  /** The compact summary line (see main's epilogue): headline numbers
+    * plus the trimmed per-query map, within `budget` bytes. `artifact` is
+    * the full artifact last written, None (emitted as `null`) when no
+    * write succeeded.
+    */
+  private[graft] def compactLine(total: Double, runs: Int, sfDir: String,
+                                 nErrors: Int, nRegressions: Int,
+                                 scaleTotal: String, hostDegraded: Boolean,
+                                 med: Seq[(String, Double)],
+                                 artifact: Option[String],
+                                 budget: Int): String = {
+    val head =
+      s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"sf":${jsonString(sfDir)},"n_queries":${med.size},"n_errors":$nErrors,"n_regressions":$nRegressions,"scale_ratio_total":$scaleTotal,"host_degraded":$hostDegraded,"queries":"""
+    def tail(elided: Int) =
+      s""","queries_elided":$elided,"full_artifact":${artifact.fold("null")(jsonString)}}"""
+    val (qMapJson, qElided) = trimmedQueriesJson(med,
+      budget - head.length - tail(med.size).length)
+    head + qMapJson + tail(qElided)
   }
 
   /** Round-over-round regression gate: compare this run's medians against
@@ -240,7 +268,6 @@ object Bench {
   private def regressionsJson(sfDir: String,
                               med: Seq[(String, Double)])
       : (String, Seq[String], Map[String, Double]) = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     def sfBase(p: String): String =
       java.nio.file.Paths.get(p).getFileName.toString
     def parse(p: java.nio.file.Path): Option[(String, Map[String, Double])] =
@@ -284,9 +311,9 @@ object Bench {
         val regs = med.flatMap { case (n, v) =>
           base.get(n).collect { case b if b > 0 && v > 1.5 * b => n -> v / b }
         }
-        val regJson = regs.map { case (k, v) => s"\"" + k + "\":" + v }
+        val regJson = regs.map { case (k, v) => jsonString(k) + ":" + v }
           .mkString("{", ",", "}")
-        (s""","baseline":"${path.getFileName}","regressions":$regJson""",
+        (s""","baseline":${jsonString(path.getFileName.toString)},"regressions":$regJson""",
           regs.map(_._1), base)
     }
   }
@@ -388,9 +415,9 @@ object Bench {
     val med = measured.map { case (n, _) => n -> median(samples(n)) }
     val mins = measured.map { case (n, _) => n -> samples(n).min }
     def toJson(kvs: Seq[(String, Double)]): String =
-      kvs.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+      kvs.map { case (k, v) => jsonString(k) + ":" + v }.mkString("{", ",", "}")
     val errJson = failures.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+      .map { case (k, v) => jsonString(k) + ":" + v }.mkString("{", ",", "}")
     val total = med.map(_._2).sum
     // scaling block: per-query medians at the small SF, per-query wall
     // ratio big/small, total ratio, and the superlinear flags
@@ -549,7 +576,7 @@ object Bench {
       if (hostDegraded && (regNames.nonEmpty || scaleFlagNames.nonEmpty))
         ""","host_note":"degraded_window_flags_suspect""""
       else ""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"order_seed":$orderSeed,"queries":${toJson(med)},"queries_min":${toJson(mins)},"errors":$errJson,"sf":"$sfDir",$hostBlock$hostNote$regJson$isoJson$scaleJson}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"order_seed":$orderSeed,"queries":${toJson(med)},"queries_min":${toJson(mins)},"errors":$errJson,"sf":${jsonString(sfDir)},$hostBlock$hostNote$regJson$isoJson$scaleJson}"""
     println(line)
     // Persist the full line to file(s): the driver captures only a
     // 2000-char stdout tail, which truncates the ~26 KB line above.
@@ -565,15 +592,18 @@ object Bench {
       case Some(p)  => Seq(p)
       case None     => Seq("bench_out.json", s"bench_out_c$cpus.json")
     }
-    for (outPath <- outPaths) try {
-      val p = java.nio.file.Paths.get(outPath)
-      java.nio.file.Files.write(p,
-        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      System.err.println(s"[bench] wrote ${p.toAbsolutePath.normalize}")
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
+    val written = outPaths.filter { outPath =>
+      try {
+        val p = java.nio.file.Paths.get(outPath)
+        java.nio.file.Files.write(p,
+          (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        System.err.println(s"[bench] wrote ${p.toAbsolutePath.normalize}")
+        true
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
+        false
+      }
     }
-    val outPath = outPaths.lastOption.getOrElse("")
     // Everything that can still write to stdout/stderr happens BEFORE the
     // compact summary below, so the driver's tail ends with one parseable
     // JSON line: Spark's own stop()-time logging is capped at ERROR, the
@@ -592,15 +622,9 @@ object Bench {
     // per-query half of the bench contract is unmet (r20 verdict item 2).
     val tailBudget = sys.env.get("SPARK_GRAFT_TAIL_BUDGET")
       .flatMap(_.toIntOption).filter(_ > 300).getOrElse(1900)
-    val compactHead =
-      s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"sf":"$sfDir","n_queries":${med.size},"n_errors":${failures.size},"n_regressions":${regNames.size},"scale_ratio_total":$scaleTotal,"host_degraded":$hostDegraded,"queries":"""
-    def compactTail(elided: Int) =
-      s""","queries_elided":$elided,"full_artifact":"$outPath"}"""
-    val mapBudget =
-      tailBudget - compactHead.length - compactTail(med.size).length
-    val (qMapJson, qElided) = trimmedQueriesJson(med, mapBudget)
     printFinalLine(
-      compactHead + qMapJson + compactTail(qElided),
+      compactLine(total, runs, sfDir, failures.size, regNames.size,
+        scaleTotal, hostDegraded, med, written.lastOption, tailBudget),
       () => { spark.sparkContext.setLogLevel("ERROR"); spark.stop() },
       () => deleteRecursively(scratchRoot.toFile)) // this run's root only
   }

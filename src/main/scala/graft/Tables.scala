@@ -103,7 +103,7 @@ object Tables {
       // local sort of its entire input for retry determinism
       // (spark.sql.execution.sortBeforeRepartition, guide §2.5) while a
       // hash of real key columns is retry-deterministic for free — the
-      // r20 FanoutProbe measured the lineitem exchange at 0.88 s
+      // r20 exchange A/B measured the lineitem exchange at 0.88 s
       // round-robin vs 0.60 s keyed (narrow consumer) and 1.43 vs
       // 0.84 s (wide). Keying lineitem on l_orderkey additionally makes
       // the fan-out exchange SATISFY downstream ClusteredDistribution
@@ -208,7 +208,7 @@ object Tables {
   // aggregation, whose ClusteredDistribution is satisfied by
   // HashPartitioning(doc_id) (partition keys ⊆ grouping keys), so the
   // keyed fan-out exchange is REUSED and the pair-sized exchange above it
-  // disappears (guide §2.4). The r21 FanoutProbe measured the pair-group
+  // disappears (guide §2.4). The r21 exchange A/B measured the pair-group
   // consumer at 0.27 s keyed vs 0.58 s round-robin (2.1×, two passes),
   // while the heavy per-row kernel shape (the codec/decade canaries whose
   // stage wall is max-per-partition work) measured a wash — hash balance

@@ -275,7 +275,7 @@ object Dedup {
     * answer for docs with NO true near-dup is scheme-dependent and the
     * oracles CASE on the same count to pick the same scheme.
     *
-    * The value is MEASURED, not guessed (graft.harness.SimhashSweep, r17:
+    * The value is MEASURED, not guessed (the r17 banding sweep:
     * near-dup-replica corpora of 5k/20k/50k/100k/200k docs, min of 2
     * runs, narrow vs wide):
     *   5k  0.98 vs 0.84 s · 20k 1.29 vs 0.93 · 50k 2.68 vs 1.38
@@ -445,7 +445,7 @@ object Dedup {
     * [[HammingWideThreshold]] (4000): the two hammingCandidates
     * consumers have opposite downstream shapes, so their crossovers
     * differ by orders of magnitude, and each is MEASURED
-    * (SimhashSweep, SPARK_GRAFT_SWEEP_OP=nn|gate, min of 3 runs,
+    * (banding sweeps: nn in r17, gate in r19; min of 3 runs,
     * near-dup-replica corpora):
     *
     *   docs    nn narrow/wide     gate narrow/wide

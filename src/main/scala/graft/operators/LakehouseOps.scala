@@ -122,6 +122,25 @@ object LakehouseOps {
       .unionByName(srcLatest)
   }
 
+  /** The rows both table formats' `selectiveMerge` commit over their
+    * touched files: the full [[mergeClauses]] grammar when `clauses` are
+    * given, else the plain [[mergeUpsert]] — MERGE WITH SCHEMA EVOLUTION
+    * when `schemaEvolution` (source-only columns join the schema
+    * additively; untouched files read them as null).
+    */
+  def selectiveMergeRows(table: String, base: DataFrame, updates: DataFrame,
+                         keys: Seq[String], clauses: Seq[MergeClause],
+                         skewSafe: Boolean,
+                         schemaEvolution: Boolean): DataFrame = {
+    require(!schemaEvolution || clauses.isEmpty,
+      s"$table: schemaEvolution composes with the plain upsert only " +
+        "(clause merges name explicit columns — align the source first)")
+    if (clauses.nonEmpty)
+      mergeClauses(base, updates, keys, clauses, skewSafe = skewSafe)
+    else mergeUpsert(base, updates, keys, skewSafe = skewSafe,
+      autoAlign = schemaEvolution)
+  }
+
   // ---------------------------------------------------------------- B2c lib
   /** The FULL MERGE grammar — conditional `whenMatched` update/delete,
     * `whenNotMatched` insert, and `whenNotMatchedBySource` update/delete
@@ -1767,7 +1786,7 @@ object LakehouseOps {
     val point = IcebergLite.readWherePart(s, t, Seq(
       IcebergLite.PartPred("o_orderdate", lo = lo, hi = hi),
       IcebergLite.PartPred("o_custkey", eq = 7L)))
-    def roll(scan: graft.sources.IcebergLite.SkippingScan,
+    def roll(scan: graft.sources.SkippingScan,
              leg: String): DataFrame =
       scan.df.groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),

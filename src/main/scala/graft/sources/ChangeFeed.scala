@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The shared NET-DIFF → CDF classifier under both formats' `changes()`:
   * given the two sides of a snapshot diff (each already restricted to
@@ -20,6 +21,24 @@ import org.apache.spark.sql.functions._
   * null bucketing == exceptAll's null-safe comparison).
   */
 private[graft] object ChangeFeed {
+
+  /** Both formats' net-diff feed: project each side to the TO `schema`
+    * (additive evolution — columns the old snapshot doesn't carry read
+    * null), [[classify]], and with `version` stamp `_commit_version`.
+    */
+  def feed(newSide: DataFrame, oldSide: DataFrame, schema: StructType,
+           keys: Seq[String], version: Option[Long]): DataFrame = {
+    def aligned(df: DataFrame): DataFrame = {
+      val have = df.columns.toSet
+      df.select(schema.fields.toIndexedSeq.map { fld =>
+        if (have.contains(fld.name)) col(s"`${fld.name}`")
+        else lit(null).cast(fld.dataType).as(fld.name)
+      }: _*)
+    }
+    val out = classify(aligned(newSide), aligned(oldSide), keys,
+      schema.fieldNames.toIndexedSeq)
+    version.fold(out)(v => out.withColumn("_commit_version", lit(v)))
+  }
 
   def classify(newSide: DataFrame, oldSide: DataFrame, keys: Seq[String],
                dataCols: Seq[String]): DataFrame = {

@@ -2473,53 +2473,15 @@ object DeltaLite {
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           p, spark.sparkContext.hadoopConfiguration))
       try {
-        import scala.jdk.CollectionConverters._
-        import org.apache.parquet.schema.LogicalTypeAnnotation
         val blocks = reader.getFooter.getBlocks.asScala.toSeq
         val numRecords = blocks.map(_.getRowCount).sum
-        // (min, max) per top-level primitive column, folded across blocks
-        val acc = scala.collection.mutable.LinkedHashMap
-          .empty[String, (Comparable[Any], Comparable[Any])]
-        for (b <- blocks; c <- b.getColumns.asScala) {
-          val parts = c.getPath.toArray
-          val st = c.getStatistics
-          if (parts.length == 1 && st != null && !st.isEmpty &&
-              st.hasNonNullValue) {
-            val logical = c.getPrimitiveType.getLogicalTypeAnnotation
-            val isString = logical != null &&
-              logical.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation]
-            if (logical == null || isString) {
-              // a RAW binary column also has a null annotation — its
-              // Binary min/max must NOT round-trip through UTF-8 into
-              // string stats ("skipped rather than mis-ranged"); only
-              // string-annotated binaries are recorded, folded in UTF-8
-              // byte order (parquet's own stats order — Java String
-              // compareTo would pick the wrong extreme past the BMP)
-              def v(x: Any): Option[Comparable[Any]] = (x match {
-                case b: org.apache.parquet.io.api.Binary =>
-                  if (isString) Some(new Utf8Bytes(b.getBytes)) else None
-                case other => Some(other)
-              }).map(_.asInstanceOf[Comparable[Any]])
-              for (mn <- v(st.genericGetMin(): Any);
-                   mx <- v(st.genericGetMax(): Any)) {
-                acc.get(parts(0)) match {
-                  case Some((lo, hi)) => acc(parts(0)) = (
-                    if (mn.compareTo(lo) < 0) mn else lo,
-                    if (mx.compareTo(hi) > 0) mx else hi)
-                  case None => acc(parts(0)) = (mn, mx)
-                }
-              }
-            }
-          }
-        }
         val node = mapper.createObjectNode()
         node.put("numRecords", numRecords)
         val mins = node.putObject("minValues")
         val maxs = node.putObject("maxValues")
         def put(o: ObjectNode, k: String, x: Any): Unit = x match {
-          case u: Utf8Bytes         =>
+          case u: FileSkipping.Utf8Bytes =>
             o.put(k, new String(u.bytes, StandardCharsets.UTF_8)); ()
-          case s: String            => o.put(k, s); ()
           case i: java.lang.Integer => o.put(k, i.intValue()); ()
           case l: java.lang.Long    => o.put(k, l.longValue()); ()
           case f: java.lang.Float   => o.put(k, f.floatValue()); ()
@@ -2527,7 +2489,9 @@ object DeltaLite {
           case b: java.lang.Boolean => o.put(k, b.booleanValue()); ()
           case _                    => ()
         }
-        acc.foreach { case (k, (lo, hi)) => put(mins, k, lo); put(maxs, k, hi) }
+        FileSkipping.footerMinMax(blocks, _ => true).foreach {
+          case (k, (lo, hi)) => put(mins, k, lo); put(maxs, k, hi)
+        }
         Some(mapper.writeValueAsString(node))
       } finally reader.close()
     } catch { case scala.util.control.NonFatal(_) => None }
@@ -2563,57 +2527,24 @@ object DeltaLite {
     */
   def selectiveMerge(spark: SparkSession, table: String, updates: DataFrame,
                      keys: Seq[String], skewSafe: Boolean = false,
-                     maxPruneKeys: Int = DefaultMaxPruneKeys,
+                     maxPruneKeys: Int = FileSkipping.DefaultMaxPruneKeys,
                      clauses: Seq[graft.operators.MergeClause] = Nil,
                      schemaEvolution: Boolean = false)
       : MergeStats = {
-    require(!schemaEvolution || clauses.isEmpty,
-      s"$table: schemaEvolution composes with the plain upsert only " +
-        "(clause merges name explicit columns — align the source first)")
-    import org.apache.spark.sql.types.{DataType => SDT, StructType => SST}
     val snap = snapshot(spark, table)
-    require(snap.schemaJson.nonEmpty, s"$table: no metaData in log")
-    val schema = SDT.fromJson(snap.schemaJson.get).asInstanceOf[SST]
-    val keyCol = keys.head
-    val isString = updates.schema(keyCol).dataType ==
-      org.apache.spark.sql.types.StringType
-
-    // Null keys never equi-join an existing row (they land as inserts),
-    // so they don't drive the prune — and must not NPE it.
     // whenNotMatchedBySource clauses involve EVERY target row by
     // definition, so key-range pruning is off the table there.
-    val keyRows =
+    val (touched, skipped) = keyPrune(table, snap, keys.head,
       if (graft.operators.MergeClause.touchesBySource(clauses)) None
-      else boundedKeys(updates, keyCol, maxPruneKeys)
-
-    val (touched, skipped) = keyRows match {
-      case None => (snap.files, Seq.empty[String]) // over bound: no prune
-      case Some(rows) if snap.partitionColumns.contains(keyCol) =>
-        // partition-keyed merge: hive data files carry no stats for the
-        // partition column — prune whole partitions on the log's
-        // partitionValues instead
-        partitionValuesPrune(snap, keyCol, rows,
-          schema(keyCol).dataType)
-      case Some(rows) =>
-        val sortedKeys: Array[AnyRef] = sortKeys(rows, isString)
-        // mapped tables record stats under PHYSICAL names
-        snap.files.partition(statsIntersect(snap,
-          physicalNameOf(snap, keyCol), isString, sortedKeys))
-    }
+      else FileSkipping.boundedKeys(updates, keys.head, maxPruneKeys))
     // readSnapshot: DV masking + physical→logical relabel ride along —
     // rewriting a DV-carrying file folds its mask in (the rewrite has
     // no DV, same live rows)
     val base = readSnapshot(spark, table, snap, touched)
-    val merged =
-      if (clauses.nonEmpty) graft.operators.LakehouseOps
-        .mergeClauses(base, updates, keys, clauses, skewSafe = skewSafe)
-      else graft.operators.LakehouseOps
-        // MERGE WITH SCHEMA EVOLUTION: source columns the target lacks
-        // join the schema additively (commit's append-evolution channel
-        // re-emits metaData; untouched files read the new columns as
-        // null — the drift shape API-ingest merges hit daily)
-        .mergeUpsert(base, updates, keys, skewSafe = skewSafe,
-          autoAlign = schemaEvolution)
+    // with schemaEvolution, commit's append-evolution channel re-emits
+    // metaData for the source-only columns
+    val merged = graft.operators.LakehouseOps.selectiveMergeRows(table,
+      base, updates, keys, clauses, skewSafe, schemaEvolution)
     // CDF: materialize the exact per-commit feed the merge implies —
     // update_pre/postimage for keys present in the base, insert for new
     // keys. Cost ∝ touched data + batch (two key semi-joins), opt-in via
@@ -2655,25 +2586,11 @@ object DeltaLite {
     */
   def selectiveDelete(spark: SparkSession, table: String, keys: DataFrame,
                       keyCols: Seq[String],
-                      maxPruneKeys: Int = DefaultMaxPruneKeys): MergeStats = {
-    import org.apache.spark.sql.types.{DataType => SDT, StructType => SST}
+                      maxPruneKeys: Int = FileSkipping.DefaultMaxPruneKeys): MergeStats = {
     import org.apache.spark.sql.functions.broadcast
     val snap = snapshot(spark, table)
-    require(snap.schemaJson.nonEmpty, s"$table: no metaData in log")
-    val schema = SDT.fromJson(snap.schemaJson.get).asInstanceOf[SST]
-    val keyCol = keyCols.head
-    val isString = keys.schema(keyCol).dataType ==
-      org.apache.spark.sql.types.StringType
-    val (touched, skipped) = boundedKeys(keys, keyCol, maxPruneKeys) match {
-      case None => (snap.files, Seq.empty[String]) // over bound: no prune
-      case Some(rows) if snap.partitionColumns.contains(keyCol) =>
-        partitionValuesPrune(snap, keyCol, rows,
-          schema(keyCol).dataType)
-      case Some(rows) =>
-        val sortedKeys: Array[AnyRef] = sortKeys(rows, isString)
-        snap.files.partition(statsIntersect(snap,
-          physicalNameOf(snap, keyCol), isString, sortedKeys))
-    }
+    val (touched, skipped) = keyPrune(table, snap, keyCols.head,
+      FileSkipping.boundedKeys(keys, keyCols.head, maxPruneKeys))
     if (touched.isEmpty) return MergeStats(snap.version, 0, skipped.size)
     val base = readSnapshot(spark, table, snap, touched)
     val delKeys = broadcast(keys
@@ -2854,12 +2771,8 @@ object DeltaLite {
     PurgeStats(v, touched.size, snap.files.size - touched.size)
   }
 
-  /** What [[readWhere]] scanned: the pruned DataFrame plus the file
-    * economics ([[filesSkipped]] is the I/O a naive full scan would have
-    * paid — at 100 TB on a clustered table it is nearly all of it).
-    */
-  final case class SkippingScan(df: DataFrame, filesScanned: Int,
-                                filesSkipped: Int)
+  /** What [[readWhere]] scanned (the shared [[graft.sources.SkippingScan]]). */
+  type SkippingScan = graft.sources.SkippingScan
 
   /** Stats-pruned READ — the protocol's data-skipping payload applied to
     * the scan path (the reason `OPTIMIZE ZORDER` exists at all): files
@@ -2877,60 +2790,16 @@ object DeltaLite {
   def readWhere(spark: SparkSession, table: String, keyCol: String,
                 lo: Any, hi: Any): SkippingScan = {
     import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types.{DataType => SDT, StructType => SST}
     val snap = snapshot(spark, table)
-    require(snap.schemaJson.nonEmpty, s"$table: no metaData in log")
-    val schema = SDT.fromJson(snap.schemaJson.get).asInstanceOf[SST]
     // key type comes from the TABLE schema, never from the bound's
-    // runtime class — a mistyped bound must not flip the comparison
-    // into lexicographic space and silently mis-prune
-    val isString = schema(keyCol).dataType ==
-      org.apache.spark.sql.types.StringType
-    require(isString == lo.isInstanceOf[String] &&
-        isString == hi.isInstanceOf[String],
-      s"$table.$keyCol is ${schema(keyCol).dataType.simpleString}; " +
-        s"bounds (${lo.getClass.getSimpleName}, ${hi.getClass.getSimpleName}) " +
-        "must match the column type")
-    def cmp(x: Any): Comparable[Any] =
-      if (isString) utf8(x.toString)
-      else new java.math.BigDecimal(x.toString).asInstanceOf[Comparable[Any]]
-    val physKey = physicalNameOf(snap, keyCol)
-    // the partition-value domain is hive-dir STRINGS — only string and
-    // integral columns compare safely against them (a date/timestamp
-    // partition value would NumberFormatException in the decimal
-    // domain); anything else scans conservatively, never crashes
-    val partPruneSafe = schema(keyCol).dataType match {
-      case org.apache.spark.sql.types.StringType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
+    // runtime class
+    val dt = tableSchema(table, snap)(keyCol).dataType
+    FileSkipping.requireBoundsMatch(table, keyCol, dt, lo, hi)
+    val (key, bounds) = pruneOn(snap, keyCol, dt)
     val (scanned, skipped) =
-      if (snap.partitionColumns.contains(keyCol)) {
-        // PARTITION column: data files carry no stats for it (hive
-        // layout) — prune on the log's partitionValues instead, same
-        // comparison domain
-        if (!partPruneSafe) (snap.files, Seq.empty[String])
-        else snap.files.partition { p =>
-          snap.partitionValues.get(p).flatMap(m => Option(m.getOrElse(keyCol, null))) match {
-            case Some(v) =>
-              val c = cmp(v)
-              c.compareTo(cmp(lo)) >= 0 && c.compareTo(cmp(hi)) <= 0
-            case None => true // unknown value: scan conservatively
-          }
-        }
-      }
-      else snap.files.partition { p =>
-        fileBounds(snap, p, physKey, isString) match {
-          case Some((mn, mx)) =>
-            mx.compareTo(cmp(lo)) >= 0 && mn.compareTo(cmp(hi)) <= 0
-          case None => true
-        }
-      }
+      FileSkipping.rangeSplit(snap.files, key, lo, hi)(bounds)
     val base = readSnapshot(spark, table, snap, scanned)
-    SkippingScan(base.filter(col(keyCol) >= lo && col(keyCol) <= hi),
+    graft.sources.SkippingScan(base.filter(col(keyCol) >= lo && col(keyCol) <= hi),
       scanned.size, skipped.size)
   }
 
@@ -3029,14 +2898,11 @@ object DeltaLite {
   def changes(spark: SparkSession, table: String, fromVersion: Long,
               toVersion: Long, keys: Seq[String],
               withVersion: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{array, col, explode, lit, struct, when}
-    import org.apache.spark.sql.types.{DataType => SDT, StructType => SST}
+    import org.apache.spark.sql.functions.{col, lit}
     require(fromVersion < toVersion, "changes requires fromVersion < toVersion")
     val from = snapshot(spark, table, Some(fromVersion))
     val to = snapshot(spark, table, Some(toVersion))
-    require(to.schemaJson.nonEmpty, s"$table: no metaData in log")
-    val schema = stripMapping(
-      SDT.fromJson(to.schemaJson.get).asInstanceOf[SST])
+    val schema = stripMapping(tableSchema(table, to))
     val dataCols = schema.fieldNames.toSeq
     // Foreign CDF channel: a CDF-enabled writer records `cdc` actions
     // pointing at `_change_data` files — the EXACT per-commit feed that
@@ -3090,142 +2956,62 @@ object DeltaLite {
       !ident(from).contains((p, to.dvs.getOrElse(p, ""))))
     val removedFiles = from.files.filter(p =>
       !ident(to).contains((p, from.dvs.getOrElse(p, ""))))
-    // additive-evolution alignment: project each side to the TO schema,
-    // null-filling columns the old snapshot doesn't carry
-    def aligned(df: DataFrame): DataFrame = {
-      val have = df.columns.toSet
-      df.select(schema.fields.toSeq.map { fld =>
-        if (have.contains(fld.name)) col(s"`${fld.name}`")
-        else lit(null).cast(fld.dataType).as(fld.name)
-      }: _*)
-    }
-    val newSide = aligned(readSnapshot(spark, table, to, addedFiles))
-    val oldSide = aligned(readSnapshot(spark, table, from, removedFiles))
-    val out = ChangeFeed.classify(newSide, oldSide, keys, dataCols)
-    if (withVersion) out.withColumn("_commit_version", lit(toVersion))
-    else out
+    ChangeFeed.feed(readSnapshot(spark, table, to, addedFiles),
+      readSnapshot(spark, table, from, removedFiles), schema, keys,
+      if (withVersion) Some(toVersion) else None)
   }
 
-  /** UTF-8 bytes under unsigned lexicographic order — the domain parquet
-    * stats and Spark's binary string comparison use; Java
-    * String.compareTo (UTF-16 code units) diverges for
-    * supplementary-plane characters, so string bounds compare HERE.
+  /** The snapshot's logical table schema; a log without metaData is
+    * refused.
     */
-  private final class Utf8Bytes(val bytes: Array[Byte])
-      extends Comparable[Utf8Bytes] {
-    def compareTo(o: Utf8Bytes): Int = {
-      val n = math.min(bytes.length, o.bytes.length)
-      var i = 0
-      while (i < n) {
-        val c = (bytes(i) & 0xFF) - (o.bytes(i) & 0xFF)
-        if (c != 0) return c
-        i += 1
-      }
-      bytes.length - o.bytes.length
-    }
+  private def tableSchema(table: String, snap: Snapshot): StructType = {
+    require(snap.schemaJson.nonEmpty, s"$table: no metaData in log")
+    DataType.fromJson(snap.schemaJson.get).asInstanceOf[StructType]
   }
 
-  private def utf8(s: String): Comparable[Any] =
-    new Utf8Bytes(s.getBytes(StandardCharsets.UTF_8))
-      .asInstanceOf[Comparable[Any]]
-
-  /** Driver-collect bound for stats pruning: past this many distinct
-    * first-key values, selectiveMerge/selectiveDelete skip pruning
-    * (correct, just unpruned) rather than collect unboundedly. ~4M keys
-    * ≈ tens of MB of driver heap — the CDC-batch shape with headroom.
+  /** What `keyCol` (of type `dt`) prunes on, as the domain and per-file
+    * bounds [[FileSkipping]] splits with: the log's partitionValues for a
+    * partition column (hive data files carry no stats for it), add-stats
+    * otherwise.
     */
-  private[graft] val DefaultMaxPruneKeys: Int = 4 << 20
+  private def pruneOn(snap: Snapshot, keyCol: String, dt: DataType)
+      : (Option[Any => FileSkipping.Key], String => Option[(Any, Any)]) =
+    if (snap.partitionColumns.contains(keyCol))
+      (FileSkipping.partitionDomain(dt), p => snap.partitionValues.get(p)
+        .flatMap(m => Option(m.getOrElse(keyCol, null))).map(v => (v, v)))
+    else (FileSkipping.domain(dt), fileBounds(snap, physicalNameOf(snap, keyCol)))
 
-  /** The batch's distinct non-null `keyCol` values, collected through a
-    * `limit(max + 1)` so at most max+1 rows EVER reach the driver; None
-    * when the batch exceeds the bound (caller must fall back to the
-    * unpruned path). Shared by selectiveMerge/selectiveDelete (and the
-    * IcebergLite twins).
+  /** Split the live files into (touched, skipped) for a merge/delete
+    * batch's distinct `keyCol` values (None: over the collect bound, no
+    * prune).
     */
-  private[graft] def boundedKeys(batch: DataFrame, keyCol: String,
-                                 maxPruneKeys: Int)
-      : Option[Array[org.apache.spark.sql.Row]] = {
-    require(maxPruneKeys > 0, s"maxPruneKeys must be positive: $maxPruneKeys")
-    val rows = batch.select(keyCol).na.drop().distinct()
-      .limit(maxPruneKeys + 1).collect()
-    if (rows.length > maxPruneKeys) None else Some(rows)
+  private def keyPrune(table: String, snap: Snapshot, keyCol: String,
+                       keys: Option[Array[org.apache.spark.sql.Row]])
+      : (Seq[String], Seq[String]) = keys match {
+    case None => (snap.files, Seq.empty)
+    case Some(rows) =>
+      // a key the schema doesn't name verbatim (Spark resolves the merge
+      // join case-insensitively) keeps every file
+      tableSchema(table, snap).find(_.name == keyCol)
+        .fold((snap.files, Seq.empty[String])) { f =>
+          val (key, bounds) = pruneOn(snap, keyCol, f.dataType)
+          FileSkipping.keySplit(snap.files, key, rows)(bounds)
+        }
   }
 
-  /** Distinct key rows → sorted comparables in the prune domain (UTF-8
-    * bytes for strings, decimal for numerics) — shared by
-    * selectiveMerge and selectiveDelete.
+  /** `path`'s recorded add-stats (min, max) on `keyCol` as the JSON text
+    * [[FileSkipping.domain]] reads (numbers as written, infinities and
+    * NaN as their quoted names); None when either bound is absent or
+    * not a scalar (consumers must be conservative).
     */
-  private def sortKeys(keyRows: Array[org.apache.spark.sql.Row],
-                       isString: Boolean): Array[AnyRef] = {
-    val cs: Array[Comparable[Any]] =
-      if (isString) keyRows.map(r => utf8(r.get(0).toString))
-      else keyRows.map(r => new java.math.BigDecimal(r.get(0).toString)
-        .asInstanceOf[Comparable[Any]])
-    cs.sortWith(_.compareTo(_) < 0).map(_.asInstanceOf[AnyRef])
-  }
-
-  /** `path`'s recorded add-stats [min,max] on `keyCol`, typed for
-    * comparison (strings in UTF-8 byte order); None when stats are
-    * absent (consumers must be conservative).
-    */
-  private def fileBounds(snap: Snapshot, path: String, keyCol: String,
-                         isString: Boolean)
-      : Option[(Comparable[Any], Comparable[Any])] =
+  private def fileBounds(snap: Snapshot, keyCol: String)(path: String)
+      : Option[(Any, Any)] =
     snap.stats.get(path).flatMap { js =>
       val node = mapper.readTree(js)
-      for {
-        mn <- Option(node.get("minValues")).flatMap(m => Option(m.get(keyCol)))
-        mx <- Option(node.get("maxValues")).flatMap(m => Option(m.get(keyCol)))
-      } yield
-        if (isString) (utf8(mn.asText()), utf8(mx.asText()))
-        else (mn.decimalValue().asInstanceOf[Comparable[Any]],
-          mx.decimalValue().asInstanceOf[Comparable[Any]])
-    }
-
-  /** Partition-value equality prune for merge/delete batches keyed on a
-    * PARTITION column: a file survives iff its recorded partition value
-    * is in the batch's key set. Only string/integral domains compare
-    * safely against the hive-dir string encoding — anything else (e.g.
-    * timestamps, whose toString differs from the dir form) keeps every
-    * file, conservative by construction. Unknown/null values rewrite.
-    */
-  private def partitionValuesPrune(snap: Snapshot, keyCol: String,
-                                   rows: Array[org.apache.spark.sql.Row],
-                                   dt: org.apache.spark.sql.types.DataType)
-      : (Seq[String], Seq[String]) = {
-    import org.apache.spark.sql.types._
-    val safe = dt match {
-      case StringType | IntegerType | LongType | ShortType | ByteType => true
-      case _ => false
-    }
-    if (!safe) return (snap.files, Seq.empty)
-    val keySet = rows.map(r => String.valueOf(r.get(0))).toSet
-    snap.files.partition { p =>
-      snap.partitionValues.get(p)
-        .flatMap(m => Option(m.getOrElse(keyCol, null))) match {
-        case Some(v) => keySet.contains(v)
-        case None    => true // unknown: rewrite conservatively
-      }
-    }
-  }
-
-  /** Shared stats-pruning predicate: does `path`'s recorded [min,max] on
-    * `keyCol` intersect the sorted key set? Missing stats → true
-    * (rewrite conservatively).
-    */
-  private def statsIntersect(snap: Snapshot, keyCol: String,
-                             isString: Boolean, sortedKeys: Array[AnyRef])
-                            (path: String): Boolean =
-    fileBounds(snap, path, keyCol, isString) match {
-      case Some((lo, hi)) =>
-        // first element ≥ lo, then check ≤ hi
-        var l = 0; var r = sortedKeys.length
-        while (l < r) {
-          val m = (l + r) >>> 1
-          if (lo.compareTo(sortedKeys(m)) > 0) l = m + 1 else r = m
-        }
-        l < sortedKeys.length && hi.compareTo(sortedKeys(l)) >= 0
-      case None => true
+      def bound(side: String): Option[String] =
+        Option(node.get(side)).flatMap(m => Option(m.get(keyCol)))
+          .filter(n => n.isNumber || n.isTextual).map(_.asText())
+      for (mn <- bound("minValues"); mx <- bound("maxValues")) yield (mn, mx)
     }
 
   /** The `files` METADATA TABLE — the live file inventory as a queryable

@@ -772,11 +772,8 @@ object IcebergLite {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema))
   }
 
-  /** What [[readWhere]] scanned — same economics contract as
-    * DeltaLite.SkippingScan.
-    */
-  final case class SkippingScan(df: DataFrame, filesScanned: Int,
-                                filesSkipped: Int)
+  /** What [[readWhere]] scanned (the shared [[graft.sources.SkippingScan]]). */
+  type SkippingScan = graft.sources.SkippingScan
 
   /** Stats-pruned READ on the Iceberg side — the manifests' spec
     * `lower_bounds`/`upper_bounds` maps applied to scan planning, the
@@ -841,65 +838,26 @@ object IcebergLite {
         n.get("transform").asText(), n.get("source-id").asInt()))
   }
 
-  /** UTF-8 bytes under unsigned lexicographic order — the domain parquet
-    * stats, Iceberg bound truncation, and Spark's binary string
-    * comparison all agree on. Java String.compareTo (UTF-16 code units)
-    * diverges for supplementary-plane characters, so string bounds are
-    * compared HERE, never as Strings.
+  /** The Iceberg types whose manifest bounds prune, as the Spark types
+    * that pick their [[FileSkipping.domain]].
     */
-  private final class Utf8Bytes(val bytes: Array[Byte])
-      extends Comparable[Utf8Bytes] {
-    def compareTo(o: Utf8Bytes): Int = {
-      val n = math.min(bytes.length, o.bytes.length)
-      var i = 0
-      while (i < n) {
-        val c = (bytes(i) & 0xFF) - (o.bytes(i) & 0xFF)
-        if (c != 0) return c
-        i += 1
-      }
-      bytes.length - o.bytes.length
-    }
-  }
-
-  /** A query key in the column's comparison domain: UTF-8 bytes for
-    * strings, exact IEEE doubles for float/double (matching what the
-    * residual `col >= lit(x)` filter compares — a decimal-string
-    * BigDecimal of 0.3 is NOT the double 0.3), integer BigDecimal for
-    * int/long.
-    */
-  private def keyComparable(tpe: String, x: Any): Comparable[Any] =
-    (tpe match {
-      case "string" => new Utf8Bytes(
-        x.toString.getBytes(StandardCharsets.UTF_8))
-      case "float" | "double" =>
-        java.lang.Double.valueOf(x.toString.toDouble)
-      case _ => new java.math.BigDecimal(x.toString)
-    }).asInstanceOf[Comparable[Any]]
+  private val BoundTypes: Map[String, DataType] = Map("int" -> IntegerType,
+    "long" -> LongType, "float" -> FloatType, "double" -> DoubleType,
+    "string" -> StringType)
 
   def readWhere(spark: SparkSession, table: String, keyCol: String,
                 lo: Any, hi: Any): SkippingScan = {
     import org.apache.spark.sql.functions.col
     val (tpe, fid) = topField(metadata(spark, table), table, keyCol)
-    require(Set("int", "long", "float", "double", "string")(tpe),
+    require(BoundTypes.contains(tpe),
       s"$table.$keyCol: bounds pruning unsupported for type $tpe")
-    val isString = tpe == "string"
-    require(isString == lo.isInstanceOf[String] &&
-        isString == hi.isInstanceOf[String],
-      s"$table.$keyCol is $tpe; bounds " +
-        s"(${lo.getClass.getSimpleName}, ${hi.getClass.getSimpleName}) " +
-        "must match the column type")
-    val (cmpLo, cmpHi) = (keyComparable(tpe, lo), keyComparable(tpe, hi))
+    FileSkipping.requireBoundsMatch(table, keyCol, BoundTypes(tpe), lo, hi)
     val snap = snapshot(spark, table)
-    val (scanned, skipped) = snap.detail.partition { fi =>
-      (fi.lowerBounds.get(fid), fi.upperBounds.get(fid)) match {
-        case (Some(lb), Some(ub)) =>
-          decodeBound(tpe, ub).compareTo(cmpLo) >= 0 &&
-            decodeBound(tpe, lb).compareTo(cmpHi) <= 0
-        case _ => true // no recorded bounds: scan conservatively
-      }
-    }
+    val (scanned, skipped) = FileSkipping.rangeSplit(snap.detail,
+      FileSkipping.domain(BoundTypes(tpe)), lo, hi)(manifestBounds(tpe, fid))
     val base = readWithDeletes(spark, table, snap, scanned)
-    SkippingScan(base.filter(col(keyCol) >= lo && col(keyCol) <= hi),
+    graft.sources.SkippingScan(
+      base.filter(col(keyCol) >= lo && col(keyCol) <= hi),
       scanned.size, skipped.size)
   }
 
@@ -971,15 +929,15 @@ object IcebergLite {
     val isEq = p.eq != null
     val T = IcebergTransforms
     tf.transform match {
-      case "identity" => icebergType match {
-        case "int" | "long" | "float" | "double" | "string" =>
-          // same comparison domain as readWhere's bound pruning
-          val x = keyComparable(icebergType, v)
-          if (isEq) x.compareTo(keyComparable(icebergType, p.eq)) == 0
-          else x.compareTo(keyComparable(icebergType, p.lo)) >= 0 &&
-            x.compareTo(keyComparable(icebergType, p.hi)) <= 0
-        case _ => true
-      }
+      case "identity" =>
+        // same comparison domain as readWhere's bound pruning
+        BoundTypes.get(icebergType).flatMap(FileSkipping.domain) match {
+          case Some(key) =>
+            val x = key(v)
+            if (isEq) x.compareTo(key(p.eq)) == 0
+            else x.compareTo(key(p.lo)) >= 0 && x.compareTo(key(p.hi)) <= 0
+          case None => true
+        }
       case t if T.isTimeTransform(t) =>
         val x = v.toLong
         if (isEq) x == T.timeValue(t, icebergType, p.eq)
@@ -999,15 +957,15 @@ object IcebergLite {
           case "string" =>
             // prefix truncation is monotone: row ∈ [lo,hi] ⇒
             // trunc(lo) ≤ pv ≤ trunc(hi) — compared in the UNSIGNED
-            // UTF-8 byte domain (keyComparable), the order parquet
-            // stats and Spark binary comparison use; Java String
-            // ordering diverges for supplementary-plane characters
+            // UTF-8 byte domain, the order parquet stats and Spark
+            // binary comparison use; Java String ordering diverges for
+            // supplementary-plane characters
             if (isEq) v == T.truncateOf(icebergType, p.eq, w)
             else {
-              val c = keyComparable("string", v)
-              c.compareTo(keyComparable("string",
+              val c = FileSkipping.utf8(v)
+              c.compareTo(FileSkipping.utf8(
                 T.truncateOf(icebergType, p.lo, w))) >= 0 &&
-                c.compareTo(keyComparable("string",
+                c.compareTo(FileSkipping.utf8(
                   T.truncateOf(icebergType, p.hi, w))) <= 0
             }
           case _ => true
@@ -1158,57 +1116,24 @@ object IcebergLite {
       topFields: Map[String, (Int, DataType)])
       : (Map[Int, Array[Byte]], Map[Int, Array[Byte]]) =
     try {
-      import org.apache.parquet.schema.LogicalTypeAnnotation
-      val acc = scala.collection.mutable.LinkedHashMap
-        .empty[String, (Comparable[Any], Comparable[Any])]
-      for (b <- reader.getFooter.getBlocks.asScala;
-           c <- b.getColumns.asScala) {
-        val parts = c.getPath.toArray
-        val st: org.apache.parquet.column.statistics.Statistics[_] =
-          c.getStatistics
-        if (parts.length == 1 && topFields.contains(parts(0)) &&
-            st != null && !st.isEmpty && st.hasNonNullValue) {
-          val logical = c.getPrimitiveType.getLogicalTypeAnnotation
-          val isString = logical != null &&
-            logical.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation]
-          // gate on the TABLE type, not just the parquet annotation: a
-          // raw BinaryType column also has a null annotation, and
-          // round-tripping arbitrary bytes through UTF-8 would mis-range
-          // it ("skipped rather than mis-ranged", like DeltaLite)
-          val wantType = topFields(parts(0))._2
-          val supported = wantType match {
-            case StringType => isString
-            case IntegerType | LongType | FloatType | DoubleType =>
-              logical == null
-            case _ => false
-          }
-          if (supported) {
-            // strings fold in UTF-8 BYTE order — the order parquet stats
-            // and the bound truncation contract use; UTF-16 String
-            // compare would pick the wrong extreme past the BMP
-            def v(x: Any): Comparable[Any] = (x match {
-              case bin: org.apache.parquet.io.api.Binary =>
-                new Utf8Bytes(bin.getBytes)
-              case other => other
-            }).asInstanceOf[Comparable[Any]]
-            val (mn, mx) = (v(st.genericGetMin(): Any),
-              v(st.genericGetMax(): Any))
-            acc.get(parts(0)) match {
-              case Some((lo, hi)) => acc(parts(0)) = (
-                if (mn.compareTo(lo) < 0) mn else lo,
-                if (mx.compareTo(hi) > 0) mx else hi)
-              case None => acc(parts(0)) = (mn, mx)
-            }
-          }
-        }
-      }
       val lower = scala.collection.mutable.Map.empty[Int, Array[Byte]]
       val upper = scala.collection.mutable.Map.empty[Int, Array[Byte]]
-      acc.foreach { case (name, (mn, mx)) =>
-        for (lb <- singleValueBytes(mn); ub <- singleValueBytes(mx)) {
-          lower(topFields(name)._1) = lb
-          upper(topFields(name)._1) = ub
+      FileSkipping.footerMinMax(reader.getFooter.getBlocks.asScala.toSeq,
+          topFields.contains).foreach { case (name, (mn, mx)) =>
+        val (id, dt) = topFields(name)
+        // gate on the TABLE type too: a string column's bounds must come
+        // from UTF-8 stats, a numeric one's from unannotated primitives
+        val isString = mn.isInstanceOf[FileSkipping.Utf8Bytes]
+        val supported = dt match {
+          case StringType => isString
+          case IntegerType | LongType | FloatType | DoubleType => !isString
+          case _ => false
         }
+        if (supported)
+          for (lb <- singleValueBytes(mn); ub <- singleValueBytes(mx)) {
+            lower(id) = lb
+            upper(id) = ub
+          }
       }
       (lower.toMap, upper.toMap)
     } catch {
@@ -1226,28 +1151,31 @@ object IcebergLite {
       case l: java.lang.Long    => Some(le(8).putLong(l).array())
       case f: java.lang.Float   => Some(le(4).putFloat(f).array())
       case d: java.lang.Double  => Some(le(8).putDouble(d).array())
-      case u: Utf8Bytes         => Some(u.bytes)
-      case s: String            => Some(s.getBytes(StandardCharsets.UTF_8))
+      case u: FileSkipping.Utf8Bytes => Some(u.bytes)
       case _                    => None
     }
   }
 
-  /** Decode a spec single-value bound into [[keyComparable]]'s domain for
-    * the type: UTF-8 bytes for strings, IEEE doubles for float/double
-    * (infinities compare fine as doubles; a decimal constructor would
-    * throw on them), integer BigDecimal for int/long.
+  /** A file's manifest (lower, upper) bound on field `fid` of Iceberg
+    * type `tpe`, decoded from the spec single-value bytes (little-endian
+    * numerics, UTF-8 strings) into the raw values
+    * [[FileSkipping.domain]] reads; None when either is missing.
     */
-  private def decodeBound(tpe: String, b: Array[Byte]): Comparable[Any] = {
+  private def manifestBounds(tpe: String, fid: Int)(fi: FileInfo)
+      : Option[(Any, Any)] = {
     import java.nio.{ByteBuffer, ByteOrder}
-    def le = ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN)
-    (tpe match {
-      case "string" => new Utf8Bytes(b)
-      case "int"    => new java.math.BigDecimal(le.getInt)
-      case "long"   => java.math.BigDecimal.valueOf(le.getLong)
-      case "float"  => java.lang.Double.valueOf(le.getFloat.toDouble)
-      case "double" => java.lang.Double.valueOf(le.getDouble)
-      case other    => sys.error(s"bounds unsupported for type $other")
-    }).asInstanceOf[Comparable[Any]]
+    def decode(b: Array[Byte]): Any = {
+      def le = ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN)
+      tpe match {
+        case "int"    => le.getInt
+        case "long"   => le.getLong
+        case "float"  => le.getFloat
+        case "double" => le.getDouble
+        case _        => b
+      }
+    }
+    for (lb <- fi.lowerBounds.get(fid); ub <- fi.upperBounds.get(fid))
+      yield (decode(lb), decode(ub))
   }
 
   /** A hive dir value, typed for the manifest's partition record (the
@@ -1925,13 +1853,10 @@ object IcebergLite {
   def selectiveMerge(spark: SparkSession, table: String, updates: DataFrame,
                      keys: Seq[String], partitionCol: String = "",
                      skewSafe: Boolean = false,
-                     maxPruneKeys: Int = DeltaLite.DefaultMaxPruneKeys,
+                     maxPruneKeys: Int = FileSkipping.DefaultMaxPruneKeys,
                      clauses: Seq[graft.operators.MergeClause] = Nil,
                      schemaEvolution: Boolean = false)
       : MergeStats = {
-    require(!schemaEvolution || clauses.isEmpty,
-      s"$table: schemaEvolution composes with the plain upsert only " +
-        "(clause merges name explicit columns — align the source first)")
     val meta0 = metadata(spark, table)
     val spec = partitionSpecFields(meta0)
     val specSourceName: Map[Int, String] =
@@ -1953,24 +1878,21 @@ object IcebergLite {
         // sourced from partitionCol admits exactly the partition values
         // its transform maps the batch keys to (bucket hashes, day
         // numbers, truncated prefixes, identity raw values)
-        DeltaLite.boundedKeys(updates, partitionCol, maxPruneKeys) match {
+        FileSkipping.boundedKeys(updates, partitionCol, maxPruneKeys) match {
           case None => noPrune
           case Some(rows) =>
             val fieldsOnCol = spec.filter(tf =>
               specSourceName.get(tf.sourceId).contains(partitionCol))
             if (fieldsOnCol.isEmpty && spec.nonEmpty &&
                 !spec.exists(_.name == partitionCol)) noPrune
-            else if (spec.isEmpty || (identityOnly && fieldsOnCol.isEmpty)) {
+            else if (spec.isEmpty || (identityOnly && fieldsOnCol.isEmpty))
               // legacy identity layout keyed by field NAME
-              val updParts: Set[String] =
-                rows.map(r => String.valueOf(r.get(0))).toSet
-              snap.detail.partition { fi =>
-                fi.partition.get(partitionCol) match {
-                  case Some(v) if v != null => updParts.contains(v)
-                  case _                    => true // unknown: rewrite
-                }
-              }
-            } else {
+              FileSkipping.keySplit(snap.detail, snap.schema
+                .find(_.name == partitionCol)
+                .flatMap(f => FileSkipping.partitionDomain(f.dataType)), rows)(
+                fi => Option(fi.partition.getOrElse(partitionCol, null))
+                  .map(v => (v, v)))
+            else {
               val tpe = topField(meta0, table, partitionCol)._1
               val T = IcebergTransforms
               val valueSets: Seq[(T.PartField, Set[String])] =
@@ -2006,45 +1928,22 @@ object IcebergLite {
         // for the first merge key — the DeltaLite add-stats shape, so a
         // range-clustered (Z-ORDERed) Iceberg table merges ∝ touched
         // files too. Bound-less files rewrite conservatively.
-        val keyCol = keys.head
-        val (tpe, fid) = topField(metadata(spark, table), table, keyCol)
-        // null keys never equi-join an existing row (they land as
-        // inserts), so they don't drive the prune — and must not NPE it
-        DeltaLite.boundedKeys(updates, keyCol, maxPruneKeys) match {
+        val (tpe, fid) = topField(meta0, table, keys.head)
+        FileSkipping.boundedKeys(updates, keys.head, maxPruneKeys) match {
           case None => noPrune
-          case Some(keyRows) =>
-        val sortedKeys: Array[Comparable[Any]] = keyRows
-          .map(r => keyComparable(tpe, r.get(0))).sortWith(_.compareTo(_) < 0)
-        snap.detail.partition { fi =>
-          (fi.lowerBounds.get(fid), fi.upperBounds.get(fid)) match {
-            case (Some(lb), Some(ub)) =>
-              val lo = decodeBound(tpe, lb)
-              val hi = decodeBound(tpe, ub)
-              // first key ≥ lo, then check ≤ hi
-              var l = 0; var r = sortedKeys.length
-              while (l < r) {
-                val m = (l + r) >>> 1
-                if (lo.compareTo(sortedKeys(m)) > 0) l = m + 1 else r = m
-              }
-              l < sortedKeys.length && hi.compareTo(sortedKeys(l)) >= 0
-            case _ => true
-          }
-        }
+          case Some(rows) => FileSkipping.keySplit(snap.detail,
+            BoundTypes.get(tpe).flatMap(FileSkipping.domain), rows)(
+            manifestBounds(tpe, fid))
         }
       }
     val base =
       if (touched.isEmpty) spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
       else readWithDeletes(spark, table, snap, touched)
-    val merged =
-      if (clauses.nonEmpty) graft.operators.LakehouseOps
-        .mergeClauses(base, updates, keys, clauses, skewSafe = skewSafe)
-      else graft.operators.LakehouseOps
-        // MERGE WITH SCHEMA EVOLUTION: source-only columns join the
-        // schema additively (commit's append-drift channel re-keys the
-        // metadata schema; untouched files read the new columns as null)
-        .mergeUpsert(base, updates, keys, skewSafe = skewSafe,
-          autoAlign = schemaEvolution)
+    // with schemaEvolution, commit's append-drift channel re-keys the
+    // metadata schema for the source-only columns
+    val merged = graft.operators.LakehouseOps.selectiveMergeRows(table,
+      base, updates, keys, clauses, skewSafe, schemaEvolution)
     // rewrite under the table's OWN layout: the FULL spec (identity
     // fields included — collapsing to just partitionCol would drop the
     // other partition columns from the rewritten metadata/dirs) is
@@ -3167,7 +3066,6 @@ object IcebergLite {
   def changes(spark: SparkSession, table: String, fromSnapshotId: Long,
               toSnapshotId: Option[Long], keys: Seq[String],
               withVersion: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions._
     require(keys.nonEmpty, "changes needs the key columns for classification")
     val meta = metadata(spark, table)
     val ids = Option(meta.get("snapshots")).map(_.elements().asScala.toSeq)
@@ -3181,24 +3079,11 @@ object IcebergLite {
     val from = snapshot(spark, table, Some(fromSnapshotId))
     val to = snapshot(spark, table, Some(toId))
     val (changedNew, changedOld) = changedSplit(spark, table, from, to)
-    // additive-evolution alignment: project each side to the TO schema,
-    // null-filling columns the old snapshot doesn't carry
-    val schema = to.schema
-    val dataCols = schema.fieldNames.toIndexedSeq
-    def aligned(df: DataFrame): DataFrame = {
-      val have = df.columns.toSet
-      df.select(schema.fields.toIndexedSeq.map { fld =>
-        if (have.contains(fld.name)) col(s"`${fld.name}`")
-        else lit(null).cast(fld.dataType).as(fld.name)
-      }: _*)
-    }
-    val newSide = aligned(readWithDeletes(spark, table, to, changedNew))
-    val oldSide = aligned(readWithDeletes(spark, table, from, changedOld))
     // the shared symmetric-diff classifier cancels rows whose visibility
     // didn't actually change (compaction rewrites) in ONE scan per side
-    val out = ChangeFeed.classify(newSide, oldSide, keys, dataCols)
-    if (withVersion) out.withColumn("_commit_version", lit(toIdx.toLong))
-    else out
+    ChangeFeed.feed(readWithDeletes(spark, table, to, changedNew),
+      readWithDeletes(spark, table, from, changedOld), to.schema, keys,
+      if (withVersion) Some(toIdx.toLong) else None)
   }
 
   /** TIMESTAMP AS OF — [[DeltaLite.readAsOf]]'s Iceberg face: resolve

@@ -335,6 +335,40 @@ class DeltaLiteSpec extends SparkSpec {
       "residual range filter lost scan pushdown")
   }
 
+  test("±Infinity add-stats bounds: readWhere, selectiveMerge and " +
+    "selectiveDelete keep the file holding the in-range key (DOUBLE and " +
+    "FLOAT)") {
+    // one file whose key column holds {1, 3, +Inf} (or {-1, -3, -Inf}):
+    // the infinite bound is written as the JSON string "Infinity" and must
+    // compare as an IEEE infinity, not as a zero that excludes key 3
+    for (sign <- Seq(1.0, -1.0); tpe <- Seq("double", "float")) {
+      val t = newTable()
+      def typed(rows: Seq[(Double, String)]) =
+        rows.toDF("x", "s").select(col("x").cast(tpe).as("x"), col("s"))
+      DeltaLite.commit(spark, t, typed(Seq((1.0, "a"), (3.0, "b"),
+        (Double.PositiveInfinity, "c")).map { case (x, s) => (x * sign, s) })
+        .coalesce(1))
+      val what = s"$tpe key, sign $sign"
+      val (lo, hi) = if (sign > 0) (2.0, 5.0) else (-5.0, -2.0)
+      val scan = DeltaLite.readWhere(spark, t, "x", lo, hi)
+      assert(scan.filesScanned == 1 &&
+        scan.df.select("s").as[String].collect().toSeq == Seq("b"), what)
+      val ms = DeltaLite.selectiveMerge(spark, t,
+        typed(Seq((3.0 * sign, "B"))), Seq("x"))
+      assert(ms.filesRewritten == 1, s"$what: $ms")
+      def rowsAt(x: Double) = DeltaLite.read(spark, t)
+        .filter(col("x") === x).select("s").as[String].collect().toSeq
+      assert(rowsAt(3.0 * sign) == Seq("B"), s"$what: updated in place")
+      assert(DeltaLite.read(spark, t).count() == 3, what)
+      val del = DeltaLite.selectiveDelete(spark, t,
+        typed(Seq((3.0 * sign, ""))).select("x"), Seq("x"))
+      // the merge may have split the file; the key sits inside every
+      // rewritten file's bounds, so none of them may be skipped
+      assert(del.filesRewritten >= 1 && rowsAt(3.0 * sign).isEmpty, what)
+      assert(DeltaLite.read(spark, t).count() == 2, what)
+    }
+  }
+
   test("optimizeZorder re-clusters an interleaved table so stats pruning " +
     "bites again, data identical") {
     val t = newTable()

@@ -112,4 +112,36 @@ class HarnessSpec extends SparkSpec {
     assert(Bench.sig3(12.345) == "12.3")
     assert(Bench.sig3(211.32943749699996) == "211")
   }
+
+  private def compactLine(artifact: Option[String],
+                          med: Seq[(String, Double)] = Seq("plain" -> 0.25),
+                          budget: Int = 1900) =
+    Bench.compactLine(2.25, 3, "/data/sf0.1", 0, 0, "null", false, med,
+      artifact, budget)
+
+  test("compact line stays valid JSON when the sf path, artifact path " +
+    "and query names hold quotes and backslashes") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val dir = """/data/a "quoted" dir\with\backslashes"""
+    val med = Seq("q\"uote" -> 1.5, "back\\slash" -> 0.5, "plain" -> 0.25)
+    val n = mapper.readTree(Bench.compactLine(2.25, 3, dir, 0, 0, "null",
+      false, med, Some(s"$dir/out.json"), 1900))
+    assert(n.get("sf").asText == dir)
+    assert(n.get("full_artifact").asText == s"$dir/out.json")
+    assert(n.get("queries").has("q\"uote") &&
+      n.get("queries").has("back\\slash") &&
+      n.get("queries_elided").asInt == 0)
+    // the byte budget holds with the escapes counted
+    val many = (1 to 200).map(i => ("q\"" + f"$i%03d", i / 100.0))
+    val tight = compactLine(Some(dir), many, 700)
+    assert(tight.length <= 700 &&
+      mapper.readTree(tight).get("queries_elided").asInt > 0)
+  }
+
+  test("compact line names no artifact (null) when no write succeeded") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    assert(mapper.readTree(compactLine(None)).get("full_artifact").isNull)
+    assert(mapper.readTree(compactLine(Some("bench_out.json")))
+      .get("full_artifact").asText == "bench_out.json")
+  }
 }

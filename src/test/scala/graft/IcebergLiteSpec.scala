@@ -395,6 +395,30 @@ class IcebergLiteSpec extends SparkSpec {
     assert(ms.filesRewritten >= 1)
   }
 
+  test("±Infinity manifest bounds: readWhere and selectiveMerge keep the " +
+    "file holding the in-range key (DOUBLE and FLOAT)") {
+    for (sign <- Seq(1.0, -1.0); tpe <- Seq("double", "float")) {
+      val t = newTable()
+      def typed(rows: Seq[(Double, String)]) =
+        rows.toDF("x", "s").select(col("x").cast(tpe).as("x"), col("s"))
+      IcebergLite.commit(spark, t, typed(Seq((1.0, "a"), (3.0, "b"),
+        (Double.PositiveInfinity, "c")).map { case (x, s) => (x * sign, s) })
+        .coalesce(1))
+      val what = s"$tpe key, sign $sign"
+      val (lo, hi) = if (sign > 0) (2.0, 5.0) else (-5.0, -2.0)
+      val scan = IcebergLite.readWhere(spark, t, "x", lo, hi)
+      assert(scan.filesScanned == 1 &&
+        scan.df.select("s").as[String].collect().toSeq == Seq("b"), what)
+      val ms = IcebergLite.selectiveMerge(spark, t,
+        typed(Seq((3.0 * sign, "B"))), Seq("x"))
+      assert(ms.filesRewritten == 1, s"$what: $ms")
+      val merged = IcebergLite.read(spark, t)
+      assert(merged.filter(col("x") === 3.0 * sign).select("s").as[String]
+        .collect().toSeq == Seq("B"), s"$what: updated in place")
+      assert(merged.count() == 3, what)
+    }
+  }
+
   test("format-version 3 metadata READS (r15 — DV support lives in " +
     "IcebergDeleteSpec); the refusal boundary moved to v4") {
     val t = newTable()

@@ -181,7 +181,7 @@ class PlanSpec extends SparkSpec {
     // the fan-out exchange below the MapPartitions (losing it serializes
     // every decode on one core: the r16 text_pii_scrub 1.1 → 4.7 s
     // class; since r21 the exchange hashes on doc_id — the r21
-    // FanoutProbe measured the heavy per-row shape as a wash vs
+    // exchange A/B measured the heavy per-row shape as a wash vs
     // round-robin's exact balance, and the key makes the same exchange
     // reusable by the text family's (doc_id, …) aggregations) — and
     // (b) fed by a doc_id-only scan with the %3 filter below the
