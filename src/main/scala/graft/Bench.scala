@@ -107,18 +107,21 @@ object Bench {
   }
 
   /** One machine-readable host-state snapshot: /proc/loadavg (1/5/15-min
-    * load + runnable count) and the hypervisor-steal tick counters from
-    * /proc/stat. The r19 decade adjudications leaned on prose ("in-VM load
-    * 2.4–4.3 with zero runnable user processes"); recording the same
-    * numbers into the artifact lets a degraded-window cycle self-label and
-    * the regression gate annotate instead of the builder narrating.
-    * Unreadable /proc (non-Linux) degrades to -1 sentinels, never throws.
+    * load + runnable count), the hypervisor-steal and iowait tick
+    * counters and the blocked (D-state) task count from /proc/stat. The
+    * r19 decade adjudications leaned on prose ("in-VM load 2.4–4.3 with
+    * zero runnable user processes"); recording the same numbers into the
+    * artifact lets a degraded-window cycle self-label and the regression
+    * gate annotate instead of the builder narrating. Unreadable /proc
+    * (non-Linux) degrades to -1 sentinels, never throws.
     */
   private[graft] case class HostSnap(load1: Double, load5: Double,
                                      load15: Double, runnable: Long,
-                                     stealTicks: Long, totalTicks: Long) {
+                                     stealTicks: Long, totalTicks: Long,
+                                     iowaitTicks: Long = -1,
+                                     blocked: Long = -1) {
     def json: String =
-      s"""{"load1":$load1,"load5":$load5,"load15":$load15,"runnable":$runnable,"steal_ticks":$stealTicks,"total_ticks":$totalTicks}"""
+      s"""{"load1":$load1,"load5":$load5,"load15":$load15,"runnable":$runnable,"blocked":$blocked,"steal_ticks":$stealTicks,"iowait_ticks":$iowaitTicks,"total_ticks":$totalTicks}"""
   }
 
   private[graft] def hostSnap(): HostSnap = try {
@@ -126,13 +129,15 @@ object Bench {
       java.nio.file.Paths.get("/proc/loadavg")),
       java.nio.charset.StandardCharsets.UTF_8).trim.split("\\s+")
     val runnable = la(3).split("/")(0).toLong
-    val cpu = scala.io.Source.fromFile("/proc/stat").getLines()
-      .find(_.startsWith("cpu ")).getOrElse("")
+    val stat = scala.io.Source.fromFile("/proc/stat").getLines().toSeq
+    val cpu = stat.find(_.startsWith("cpu ")).getOrElse("")
       .split("\\s+").drop(1).flatMap(_.toLongOption)
     // /proc/stat cpu fields: user nice system idle iowait irq softirq steal
-    val steal = if (cpu.length > 7) cpu(7) else -1L
+    def field(i: Int) = if (cpu.length > i) cpu(i) else -1L
+    val blocked = stat.find(_.startsWith("procs_blocked "))
+      .flatMap(_.split("\\s+").lift(1)).flatMap(_.toLongOption).getOrElse(-1L)
     HostSnap(la(0).toDouble, la(1).toDouble, la(2).toDouble, runnable,
-      steal, if (cpu.nonEmpty) cpu.sum else -1L)
+      field(7), if (cpu.nonEmpty) cpu.sum else -1L, field(4), blocked)
   } catch { case _: Throwable => HostSnap(-1, -1, -1, -1, -1, -1) }
 
   /** The artifact's `host` block plus the degraded-window verdict the gate
@@ -158,19 +163,28 @@ object Bench {
     * neighbors OUTSIDE the VM, invisible to runnable — keeps its own
     * independent arm, which is what flagged the measured r19/r20
     * degraded evenings (steal 5.7%).
+    *
+    * I/O contention: load1 also counts D-state (uninterruptible I/O)
+    * tasks, which the runnable field never shows, so an I/O-saturated
+    * window has high load1 with few runnable tasks. Two more arms catch
+    * it: iowait above 5% of the window's ticks, and more blocked tasks
+    * than the busy bar. The busy bar is `max(2, cpus/4)` as a float, so
+    * on a 4-core host one stray task at the sampling instant cannot flip
+    * the label. These are the rules perfbench's host record applies.
     */
   private[graft] def hostJson(pre: HostSnap, mid: Option[HostSnap],
                               post: HostSnap, cpus: Int): (String, Boolean) = {
-    val stealPct =
-      if (pre.stealTicks >= 0 && post.stealTicks >= pre.stealTicks &&
-          post.totalTicks > pre.totalTicks)
-        100.0 * (post.stealTicks - pre.stealTicks) /
-          (post.totalTicks - pre.totalTicks)
+    def pct(a: Long, b: Long) =
+      if (a >= 0 && b >= a && post.totalTicks > pre.totalTicks)
+        100.0 * (b - a) / (post.totalTicks - pre.totalTicks)
       else -1.0
-    val degraded = stealPct > 2.0 ||
-      (pre.load1 > 2.0 && pre.runnable > cpus / 4)
+    val stealPct = pct(pre.stealTicks, post.stealTicks)
+    val iowaitPct = pct(pre.iowaitTicks, post.iowaitTicks)
+    val busy = math.max(2.0, cpus / 4.0)
+    val degraded = stealPct > 2.0 || iowaitPct > 5.0 ||
+      (pre.load1 > 2.0 && pre.runnable > busy) || pre.blocked > busy
     val midJson = mid.fold("null")(_.json)
-    (s""""host":{"pre":${pre.json},"mid":$midJson,"post":${post.json},"steal_pct":$stealPct,"degraded":$degraded}""",
+    (s""""host":{"pre":${pre.json},"mid":$midJson,"post":${post.json},"steal_pct":$stealPct,"iowait_pct":$iowaitPct,"degraded":$degraded}""",
       degraded)
   }
 

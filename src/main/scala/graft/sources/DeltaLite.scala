@@ -8,7 +8,8 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType,
+  IntegerType, LongType, MapType, ShortType, StringType, StructField, StructType}
 
 /** Native reader/writer for the (public) Delta Lake transaction-log
   * protocol — the minimal core that makes transactional parquet tables
@@ -126,10 +127,87 @@ object DeltaLite {
     } finally in.close()
   }
 
+  // The checkpoint fields the snapshot fold reads, per action: the key
+  // fields (absent or mistyped in the file schema: the action is not
+  // read at all; null in a row: the row holds no such action), then the
+  // optional ones (absent or mistyped: read as null), each with the
+  // parquet types it may have.
+  private val integral: DataType => Boolean =
+    Set[DataType](ByteType, ShortType, IntegerType, LongType)
+  private val strs: DataType => Boolean = {
+    case ArrayType(StringType, _) => true
+    case _                        => false
+  }
+  private val nested: DataType => Boolean = {
+    case _: StructType | _: MapType => true
+    case _                          => false
+  }
+  private val CheckpointFields: Seq[(String, Seq[(String, DataType => Boolean)],
+                                     Seq[(String, DataType => Boolean)])] = Seq(
+    ("add", Seq("path" -> (_ == StringType)), Seq("stats" -> (_ == StringType),
+      "deletionVector" -> nested, "partitionValues" -> nested,
+      "baseRowId" -> integral, "defaultRowCommitVersion" -> integral)),
+    ("metaData", Seq("schemaString" -> (_ == StringType)),
+      Seq("configuration" -> nested, "partitionColumns" -> strs)),
+    ("protocol", Seq("minReaderVersion" -> integral), Seq(
+      "readerFeatures" -> strs, "minWriterVersion" -> integral,
+      "writerFeatures" -> strs)),
+    ("domainMetadata", Seq("domain" -> (_ == StringType)), Seq(
+      "configuration" -> (_ == StringType), "removed" -> (_ == BooleanType))),
+    ("txn", Seq("appId" -> (_ == StringType), "version" -> integral), Nil),
+    ("sidecar", Seq("path" -> (_ == StringType)), Nil))
+
+  /** The actions of one parquet checkpoint file set — classic single- or
+    * multi-part, a V2 top level, or V2 sidecars — as the JSON action
+    * nodes commit replay folds, in ONE Spark job. The read schema comes
+    * from the first file's footer on the driver (Spark's own inference
+    * rule: its row-metadata schema, else the parquet schema converted),
+    * so no inference job runs; the projection, fixed by that schema
+    * before the job, keeps only [[CheckpointFields]]. `remove` rows are
+    * vacuum tombstones, not live state, and are not read.
+    */
+  private def checkpointActions(spark: SparkSession,
+                                paths: Seq[String]): Seq[JsonNode] = {
+    val meta = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new Path(paths.min), spark.sparkContext.hadoopConfiguration))
+      try r.getFooter.getFileMetaData finally r.close()
+    }
+    val schema = Option(meta.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata"))
+      .flatMap(js => scala.util.Try(DataType.fromJson(js)).toOption)
+      .collect { case st: StructType => st }
+      .getOrElse(new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetToSparkSchemaConverter(spark.sessionState.conf)
+        .convert(meta.getSchema))
+    def typeOf(action: String, field: String): Option[DataType] =
+      schema.find(_.name == action).map(_.dataType).collect {
+        case st: StructType => st
+      }.flatMap(_.find(_.name == field)).map(_.dataType)
+    val actions = CheckpointFields.flatMap { case (action, keys, rest) =>
+      def sel(fs: Seq[(String, DataType => Boolean)]) =
+        fs.filter { case (n, ok) => typeOf(action, n).exists(ok) }.map(_._1)
+      val present = sel(keys ++ rest)
+      if (sel(keys).size < keys.size) None
+      else Some(s"'$action', IF(" +
+        keys.map(k => s"`$action`.`${k._1}` IS NOT NULL").mkString(" AND ") +
+        present.map(n => s"'$n', `$action`.`$n`")
+          .mkString(", named_struct(", ", ", "), NULL)"))
+    }
+    if (actions.isEmpty) Nil
+    else spark.read.schema(schema).parquet(paths: _*)
+      .selectExpr(actions.mkString("to_json(named_struct(", ", ", "))"))
+      .collect().toSeq.map(r => mapper.readTree(r.getString(0)))
+  }
+
   /** Replay the log to `version` (default: latest). Checkpoint-aware: if
-    * `_last_checkpoint` names a version ≤ the target, the file set
-    * bootstraps from that parquet checkpoint (read distributed, collected
-    * — it is the file LIST, not the data) and only the JSON tail replays.
+    * a complete checkpoint ≤ the target exists, the file set bootstraps
+    * from it and only the JSON tail replays. The checkpoint's actions
+    * reach the same fold as the commits' ([[checkpointActions]]): a
+    * classic checkpoint costs one Spark job, a V2 parquet one at most
+    * two (top level, then its sidecars), a V2 JSON top level at most
+    * one (its sidecars); JSON replay runs on the driver, no job.
     */
   def snapshot(spark: SparkSession, table: String,
                version: Option[Long] = None): Snapshot = {
@@ -178,13 +256,11 @@ object DeltaLite {
     var readerFeatures = Set.empty[String]
     var minWriter = 1
     var writerFeatures = Set.empty[String]
-    // ONE decoder for a partitionValues map node — the JSON-replay and
-    // checkpoint paths must not drift on null handling
-    def pvMapOf(p: JsonNode): Map[String, String] =
-      p.properties().iterator().asScala.map(e => e.getKey ->
-        (if (e.getValue.isNull) null else e.getValue.asText())).toMap
     def pvOf(n: JsonNode): Map[String, String] =
-      Option(n.get("partitionValues")).map(pvMapOf).getOrElse(Map.empty)
+      Option(n.get("partitionValues")).map(_.properties().iterator().asScala
+        .map(e => e.getKey ->
+          (if (e.getValue.isNull) null else e.getValue.asText())).toMap)
+        .getOrElse(Map.empty)
 
     def confOf(n: JsonNode): Map[String, String] =
       Option(n.get("configuration")).map { c =>
@@ -218,104 +294,41 @@ object DeltaLite {
         domains -= d.get("domain").asText()
       else domains(d.get("domain").asText()) =
         Option(d.get("configuration")).map(_.asText()).getOrElse("")
-
-    // net-state ADD rows of a checkpoint frame (removes in a checkpoint
-    // are vacuum tombstones, not live state). Foreign checkpoints may
-    // carry per-file deletionVector structs.
-    def processAddFrame(adds: org.apache.spark.sql.DataFrame): Unit =
-      if (adds.columns.contains("add")) {
-        val addFields = adds.schema("add").dataType match {
-          case st: StructType => st.fieldNames.toSet
-          case _              => Set.empty[String]
-        }
-        val statsSel =
-          if (addFields.contains("stats")) "add.stats"
-          else "CAST(NULL AS STRING)"
-        val dvSel =
-          if (addFields.contains("deletionVector")) "to_json(add.deletionVector)"
-          else "CAST(NULL AS STRING)"
-        val pvSel =
-          if (addFields.contains("partitionValues")) "to_json(add.partitionValues)"
-          else "CAST(NULL AS STRING)"
-        val rowIdSel =
-          if (addFields.contains("baseRowId")) "add.baseRowId"
-          else "CAST(NULL AS BIGINT)"
-        val rowVerSel =
-          if (addFields.contains("defaultRowCommitVersion"))
-            "add.defaultRowCommitVersion"
-          else "CAST(NULL AS BIGINT)"
-        adds.selectExpr("add.path", statsSel, dvSel, pvSel,
-          rowIdSel, rowVerSel).collect().foreach { r =>
-          Option(r.getString(0)).foreach { p =>
-            files += p
-            Option(r.getString(1)).foreach(stats(p) = _)
-            Option(r.getString(2)).foreach(dvs(p) = _)
-            Option(r.getString(3)).foreach { js =>
-              val pv = pvMapOf(mapper.readTree(js))
-              if (pv.nonEmpty) partValues(p) = pv
-            }
-            if (!r.isNullAt(4))
-              rowIds(p) = (r.getLong(4),
-                if (r.isNullAt(5)) 0L else r.getLong(5))
-          }
-        }
+    // one action of commit `v` (a checkpoint's rows replay as v = 0:
+    // an add without defaultRowCommitVersion there predates the field)
+    def applyAction(a: JsonNode, v: Long): Unit = {
+      if (a.has("protocol")) applyProtocolNode(a.get("protocol"))
+      if (a.has("metaData")) applyMetaDataNode(a.get("metaData"))
+      if (a.has("domainMetadata")) applyDomainNode(a.get("domainMetadata"))
+      if (a.has("add")) {
+        val add = a.get("add")
+        val p = add.get("path").asText()
+        files += p
+        if (add.has("stats")) stats(p) = add.get("stats").asText()
+        else stats -= p
+        if (add.has("deletionVector") && !add.get("deletionVector").isNull)
+          dvs(p) = add.get("deletionVector").toString
+        else dvs -= p
+        val pv = pvOf(add)
+        if (pv.nonEmpty) partValues(p) = pv else partValues -= p
+        if (add.has("baseRowId"))
+          rowIds(p) = (add.get("baseRowId").asLong(),
+            add.path("defaultRowCommitVersion").asLong(v))
+        else rowIds -= p
       }
-
-    // non-file actions of a parquet checkpoint frame
-    def processCpFrame(cp: org.apache.spark.sql.DataFrame): Unit = {
-      val cols = cp.columns.toSet
-      if (cols.contains("metaData")) {
-        cp.select("metaData.schemaString").collect()
-          .flatMap(r => Option(r.getString(0))).lastOption
-          .foreach(s => schemaJson = Some(s))
-        // foreign checkpoints carry the full metaData incl. configuration
-        try cp.selectExpr("to_json(metaData.configuration)").collect()
-          .flatMap(r => Option(r.getString(0))).lastOption.foreach { js =>
-            configuration = mapper.readTree(js).properties().iterator().asScala
-              .map(e => e.getKey -> e.getValue.asText()).toMap
-          }
-        catch { case scala.util.control.NonFatal(_) => }
-        try cp.selectExpr("to_json(metaData.partitionColumns)").collect()
-          .flatMap(r => Option(r.getString(0))).lastOption.foreach { js =>
-            partitionColumns = mapper.readTree(js).elements().asScala
-              .map(_.asText()).toSeq
-          }
-        catch { case scala.util.control.NonFatal(_) => }
+      if (a.has("remove")) {
+        val p = a.get("remove").get("path").asText()
+        files -= p
+        stats -= p
+        dvs -= p
+        partValues -= p
+        rowIds -= p
       }
-      if (cols.contains("protocol")) {
-        cp.select("protocol.minReaderVersion").collect()
-          .flatMap(r => if (r.isNullAt(0)) None else Some(r.getInt(0)))
-          .foreach(v => minReader = math.max(minReader, v))
-        try cp.selectExpr("protocol.readerFeatures").collect().foreach { r =>
-          if (!r.isNullAt(0))
-            readerFeatures ++= r.getSeq[String](0)
-        } catch { case scala.util.control.NonFatal(_) => }
-        try cp.selectExpr("protocol.minWriterVersion").collect()
-          .foreach(r => if (!r.isNullAt(0))
-            minWriter = math.max(minWriter, r.getInt(0)))
-        catch { case scala.util.control.NonFatal(_) => }
-        try cp.selectExpr("protocol.writerFeatures").collect().foreach { r =>
-          if (!r.isNullAt(0)) writerFeatures ++= r.getSeq[String](0)
-        } catch { case scala.util.control.NonFatal(_) => }
-      }
-      if (cols.contains("domainMetadata")) {
-        try cp.selectExpr("domainMetadata.domain",
-          "domainMetadata.configuration", "domainMetadata.removed")
-          .collect().foreach { r =>
-            if (!r.isNullAt(0)) {
-              if (!r.isNullAt(2) && r.getBoolean(2)) domains -= r.getString(0)
-              else domains(r.getString(0)) =
-                Option(r.getString(1)).getOrElse("")
-            }
-          }
-        catch { case scala.util.control.NonFatal(_) => }
-      }
-      // foreign checkpoints carry SetTransaction state as txn rows
-      if (cols.contains("txn")) {
-        try cp.selectExpr("txn.appId", "txn.version").collect().foreach { r =>
-          if (!r.isNullAt(0) && !r.isNullAt(1))
-            txns(r.getString(0)) = r.getLong(1)
-        } catch { case scala.util.control.NonFatal(_) => }
+      // SetTransaction: a foreign streaming writer's exactly-once
+      // bookkeeping — latest version per appId wins on replay
+      if (a.has("txn")) {
+        val t = a.get("txn")
+        txns(t.get("appId").asText()) = t.get("version").asLong()
       }
     }
 
@@ -329,94 +342,44 @@ object DeltaLite {
       val cpPaths = logList.filter(_.getName.startsWith(prefix))
       val parquets = cpPaths.filter(_.getName.endsWith(".parquet"))
       val jsonTops = cpPaths.filter(_.getName.endsWith(".json"))
-      def resolveSidecar(p: String): String =
+      val top =
+        if (parquets.nonEmpty) checkpointActions(spark, parquets.map(_.toString))
+        else if (jsonTops.nonEmpty) jsonTops.flatMap(p => readActions(f, p))
+        else sys.error(
+          s"$table: _last_checkpoint names v$cv but no checkpoint file found")
+      val sidecars = top.filter(_.has("sidecar")).map { a =>
+        val p = a.get("sidecar").get("path").asText()
         if (p.contains("://") || p.startsWith("/")) p
         else new Path(new Path(logDir(table), "_sidecars"), p).toString
-      if (parquets.nonEmpty) {
-        val cp = spark.read.parquet(parquets.map(_.toString): _*)
-        processCpFrame(cp)
-        val adds =
-          if (cp.columns.contains("sidecar")) {
-            val paths = cp.selectExpr("sidecar.path").collect()
-              .flatMap(r => Option(r.getString(0))).map(resolveSidecar).toSeq
-            if (paths.nonEmpty) spark.read.parquet(paths: _*) else cp
-          } else cp
-        processAddFrame(adds)
-      } else if (jsonTops.nonEmpty) {
-        // V2-JSON top level: NDJSON actions, net-state semantics
-        val actions = jsonTops.flatMap(p => readActions(f, p))
-        actions.foreach { a =>
-          if (a.has("protocol")) applyProtocolNode(a.get("protocol"))
-          if (a.has("metaData")) applyMetaDataNode(a.get("metaData"))
-          if (a.has("domainMetadata")) applyDomainNode(a.get("domainMetadata"))
-          if (a.has("txn")) {
-            val t = a.get("txn")
-            txns(t.get("appId").asText()) = t.get("version").asLong()
-          }
-          if (a.has("add")) { // inline file actions (sidecar-less flavor)
-            val add = a.get("add")
-            val p = add.get("path").asText()
-            files += p
-            if (add.has("stats")) stats(p) = add.get("stats").asText()
-            if (add.has("deletionVector") && !add.get("deletionVector").isNull)
-              dvs(p) = add.get("deletionVector").toString
-            val pv = pvOf(add)
-            if (pv.nonEmpty) partValues(p) = pv
-            if (add.has("baseRowId"))
-              rowIds(p) = (add.get("baseRowId").asLong(),
-                add.path("defaultRowCommitVersion").asLong(0L))
-          }
-        }
-        val sidecarPaths = actions.filter(_.has("sidecar"))
-          .map(a => resolveSidecar(a.get("sidecar").get("path").asText()))
-        if (sidecarPaths.nonEmpty)
-          processAddFrame(spark.read.parquet(sidecarPaths: _*))
-      } else sys.error(
-        s"$table: _last_checkpoint names v$cv but no checkpoint file found")
+      }
+      // net state: a checkpoint's removes are tombstones (only a JSON
+      // top level carries them; the parquet decode never reads them)
+      (top ++ (if (sidecars.isEmpty) Nil else checkpointActions(spark, sidecars)))
+        .filterNot(_.has("remove")).foreach(applyAction(_, 0L))
     }
 
     val replayFrom = cpVersion.map(_ + 1).getOrElse(0L)
     vs.filter(v => v >= replayFrom && v <= target).foreach { v =>
-      readActions(f, commitFile(table, v)).foreach { a =>
-        if (a.has("protocol")) applyProtocolNode(a.get("protocol"))
-        if (a.has("metaData")) applyMetaDataNode(a.get("metaData"))
-        if (a.has("domainMetadata")) applyDomainNode(a.get("domainMetadata"))
-        if (a.has("add")) {
-          val add = a.get("add")
-          val p = add.get("path").asText()
-          files += p
-          if (add.has("stats")) stats(p) = add.get("stats").asText()
-          else stats -= p
-          if (add.has("deletionVector") && !add.get("deletionVector").isNull)
-            dvs(p) = add.get("deletionVector").toString
-          else dvs -= p
-          val pv = pvOf(add)
-          if (pv.nonEmpty) partValues(p) = pv else partValues -= p
-          if (add.has("baseRowId"))
-            rowIds(p) = (add.get("baseRowId").asLong(),
-              add.path("defaultRowCommitVersion").asLong(v))
-          else rowIds -= p
-        }
-        if (a.has("remove")) {
-          val p = a.get("remove").get("path").asText()
-          files -= p
-          stats -= p
-          dvs -= p
-          partValues -= p
-          rowIds -= p
-        }
-        // SetTransaction: a foreign streaming writer's exactly-once
-        // bookkeeping — latest version per appId wins on replay
-        if (a.has("txn")) {
-          val t = a.get("txn")
-          txns(t.get("appId").asText()) = t.get("version").asLong()
-        }
-      }
+      readActions(f, commitFile(table, v)).foreach(applyAction(_, v))
     }
-    // Reader-protocol gate: v1 plain, v2 adds column mapping (supported),
-    // v3 is table features — supported iff every listed reader feature is
-    // one this reader implements. Anything else is REFUSED loudly rather
-    // than mis-read.
+    requireReadable(table, minReader, readerFeatures)
+    Snapshot(target, schemaJson, files.toSeq,
+      stats.view.filterKeys(files.contains).toMap,
+      dvs.view.filterKeys(files.contains).toMap,
+      configuration, txns.toMap, partitionColumns,
+      partValues.view.filterKeys(files.contains).toMap,
+      minWriter, writerFeatures, minReader, readerFeatures, domains.toMap,
+      rowIds.view.filterKeys(files.contains).toMap)
+  }
+
+  /** Reader-protocol gate: v1 plain, v2 adds column mapping (supported),
+    * v3 is table features — supported iff every listed reader feature is
+    * one this reader implements. Anything else is REFUSED loudly rather
+    * than mis-read. Replay only raises the version and grows the feature
+    * set, so the gate at a version implies it at every earlier one.
+    */
+  private def requireReadable(table: String, minReader: Int,
+                              readerFeatures: Set[String]): Unit =
     if (minReader >= 3) {
       require(readerFeatures.nonEmpty,
         s"$table: reader protocol v$minReader without a readerFeatures " +
@@ -427,14 +390,6 @@ object DeltaLite {
           "— unsupported, refusing")
     } else require(minReader <= 2,
       s"$table: requires Delta reader protocol v$minReader — unsupported")
-    Snapshot(target, schemaJson, files.toSeq,
-      stats.view.filterKeys(files.contains).toMap,
-      dvs.view.filterKeys(files.contains).toMap,
-      configuration, txns.toMap, partitionColumns,
-      partValues.view.filterKeys(files.contains).toMap,
-      minWriter, writerFeatures, minReader, readerFeatures, domains.toMap,
-      rowIds.view.filterKeys(files.contains).toMap)
-  }
 
   /** Writer features this implementation actually honors when COMMITTING
     * to a table that declares them (the v7 table-features vocabulary):
@@ -3217,31 +3172,75 @@ object DeltaLite {
       retainVersions = math.min(math.max(retained, 1), stamps.size))
   }
 
-  def vacuum(spark: SparkSession, table: String,
-             retainVersions: Int = 1): Seq[String] = {
-    require(retainVersions >= 1, "must retain at least the latest version")
-    val vs = versions(spark, table)
+  /** What a VACUUM retaining the last `retainVersions` versions keeps:
+    * the data files live at any retained version, the names of the DV
+    * files their descriptors point at (a DV superseded by a later delete
+    * is reapable like a superseded data file), and the cdc files the
+    * retained commits reference (a cdc file serves changes() only for
+    * ranges covering its own version). One snapshot bootstraps the
+    * oldest retained version; the later retained commits' add/remove
+    * actions then replay on top in order, and each version's live files
+    * and descriptors join the keep-set — the union of one snapshot per
+    * retained version, read once.
+    */
+  private[graft] def vacuumKeep(spark: SparkSession, table: String,
+                                retainVersions: Int)
+      : (Set[String], Set[String], Set[String]) = {
+    val retained = versions(spark, table).takeRight(retainVersions)
+    val base = snapshot(spark, table, retained.headOption)
+    val live = scala.collection.mutable.Map.empty[String, Option[String]] ++
+      base.files.map(p => p -> base.dvs.get(p))
+    val keep = scala.collection.mutable.Set.empty[String] ++ base.files
+    val keepDv = scala.collection.mutable.Set.empty[String] ++ base.dvs.values
+    val keepCdc = scala.collection.mutable.Set.empty[String]
+    var minReader = base.minReaderVersion
+    var readerFeatures = base.readerFeatures
+    val f = fs(spark, logDir(table))
+    retained.foreach { v =>
+      val actions = readActions(f, commitFile(table, v))
+      keepCdc ++= actions.filter(_.has("cdc")).map(_.get("cdc").get("path").asText())
+      if (v != retained.head) {
+        val added = scala.collection.mutable.Set.empty[String]
+        actions.foreach { a =>
+          if (a.has("add")) {
+            val add = a.get("add")
+            added += add.get("path").asText()
+            live(add.get("path").asText()) =
+              Option(add.get("deletionVector")).filterNot(_.isNull).map(_.toString)
+          }
+          if (a.has("remove")) live -= a.get("remove").get("path").asText()
+          if (a.has("protocol")) {
+            val pr = a.get("protocol")
+            minReader = math.max(minReader, pr.get("minReaderVersion").asInt())
+            if (pr.has("readerFeatures"))
+              readerFeatures ++= pr.get("readerFeatures").elements().asScala
+                .map(_.asText())
+          }
+        }
+        // files live before this commit and untouched by it already
+        // joined the keep-set with their current descriptors
+        added.filter(live.contains).foreach { p =>
+          keep += p
+          keepDv ++= live(p)
+        }
+      }
+    }
+    // every retained snapshot would have passed the reader gate
+    requireReadable(table, minReader, readerFeatures)
     val root = new Path(table)
-    val retained = vs.takeRight(retainVersions)
-      .map(v => snapshot(spark, table, Some(v)))
-    val keep: Set[String] = retained.flatMap(_.files).toSet
-    // DV sidecars referenced by any retained snapshot survive too; a
-    // superseded DV (extended by a later delete) is reapable like a
-    // superseded data file
-    val keepDv: Set[String] = retained.flatMap(_.dvs.values).flatMap { dj =>
+    (keep.toSet, keepDv.toSet.flatMap { (dj: String) =>
       val d = parseDv(dj)
       if (d.storageType == "i") None
       else Some(DeletionVectors.dvFilePath(root, d).getName)
-    }.toSet
+    }, keepCdc.toSet)
+  }
+
+  def vacuum(spark: SparkSession, table: String,
+             retainVersions: Int = 1): Seq[String] = {
+    require(retainVersions >= 1, "must retain at least the latest version")
+    val root = new Path(table)
+    val (keep, keepDv, keepCdc) = vacuumKeep(spark, table, retainVersions)
     val f = fs(spark, root)
-    // CDF channel: cdc files live under _change_data/ and are referenced
-    // only by their OWN commit's cdc actions — a cdc file serves
-    // changes() for ranges covering its version, so one outside the
-    // retention horizon is unreachable and reapable like a data file
-    val keepCdc: Set[String] = vs.takeRight(retainVersions).flatMap { v =>
-      readActions(f, commitFile(table, v)).filter(_.has("cdc"))
-        .map(_.get("cdc").get("path").asText())
-    }.toSet
     // walk the root plus hive partition dirs (partitioned layouts keep
     // data files under col=value/ paths; the keep-set is RELATIVE paths)
     // plus the _change_data dir (cdc keep-set)
@@ -3327,22 +3326,17 @@ object DeltaLite {
       else logNames.filter(n => cpVersionOf(n).exists(v =>
         v <= newestCp && !keepCps.contains(v)))
     // sidecars: keep those referenced by any SURVIVING v2 checkpoint
-    def sidecarRefs(names: Seq[String]): Set[String] = names.flatMap {
-      case n @ CpRe(_, uuid) if uuid != null =>
-        try {
-          val cp = spark.read.parquet(new Path(logDir(table), n).toString)
-          if (cp.columns.contains("sidecar"))
-            cp.selectExpr("sidecar.path").collect()
-              .flatMap(r => Option(r.getString(0)))
-              .filterNot(p => p.contains("://") || p.startsWith("/")).toSeq
-          else Nil
-        } catch { case scala.util.control.NonFatal(_) => Nil }
-      case n @ CpJsonRe(_) =>
-        try readActions(f, new Path(logDir(table), n)).filter(_.has("sidecar"))
-          .map(_.get("sidecar").get("path").asText())
-          .filterNot(p => p.contains("://") || p.startsWith("/"))
-        catch { case scala.util.control.NonFatal(_) => Nil }
-      case _ => Nil
+    // (only a v2 top level names sidecars; multi-part parts never do)
+    val V2ParquetRe = """\d{20}\.checkpoint\.[-a-zA-Z0-9_]+\.parquet""".r
+    def sidecarRefs(names: Seq[String]): Set[String] = names.flatMap { n =>
+      val p = new Path(logDir(table), n)
+      try (n match {
+        case V2ParquetRe() => checkpointActions(spark, Seq(p.toString))
+        case CpJsonRe(_)   => readActions(f, p)
+        case _             => Nil
+      }).filter(_.has("sidecar")).map(_.get("sidecar").get("path").asText())
+        .filterNot(s => s.contains("://") || s.startsWith("/"))
+      catch { case scala.util.control.NonFatal(_) => Nil }
     }.toSet
     // sidecars referenced by ANY surviving checkpoint stay (the floor's
     // retained bootstrap may be v2-shaped too, not just the newest)

@@ -988,4 +988,105 @@ class DeltaLiteSpec extends SparkSpec {
     DeltaLite.cleanupLogs(spark, t)
     assert(DeltaLite.read(spark, t).count() == 7L)
   }
+
+  test("vacuum keeps exactly the union of one snapshot per retained " +
+    "version: DV extension, re-added path, vacuumed file, hive layout, CDF") {
+    import scala.jdk.CollectionConverters._
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    // the keep-sets as one full snapshot per retained version gives them
+    def union(t: String, retain: Int): (Set[String], Set[String], Set[String]) = {
+      val vs = DeltaLite.versions(spark, t).takeRight(retain)
+      val snaps = vs.map(v => DeltaLite.snapshot(spark, t, Some(v)))
+      val dvNames = snaps.flatMap(_.dvs.values).map(mapper.readTree)
+        .filter(_.get("storageType").asText() != "i")
+        .map(n => graft.sources.DeletionVectors.dvFilePath(
+          new org.apache.hadoop.fs.Path(t),
+          graft.sources.DeletionVectors.DvDescriptor(
+            n.get("storageType").asText(), n.get("pathOrInlineDv").asText(),
+            n.path("offset").asInt(0), n.get("sizeInBytes").asInt(),
+            n.get("cardinality").asLong())).getName)
+      val cdc = vs.flatMap { v =>
+        val log = java.nio.file.Paths.get(t, "_delta_log", f"$v%020d.json")
+        new String(Files.readAllBytes(log), "UTF-8").linesIterator
+          .map(mapper.readTree).filter(_.has("cdc"))
+          .map(_.get("cdc").get("path").asText())
+      }
+      (snaps.flatMap(_.files).toSet, dvNames.toSet, cdc.toSet)
+    }
+    // the files a vacuum keeping `keep` must delete, from the disk
+    def victimsOf(t: String, keep: (Set[String], Set[String], Set[String])): Set[String] = {
+      val root = java.nio.file.Paths.get(t)
+      val all = Files.walk(root).iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString)
+        .filterNot(_.startsWith("_delta_log")).toSet
+      all.filter { rel =>
+        val n = rel.split('/').last
+        if (rel.startsWith("_change_data/"))
+          rel.endsWith(".parquet") && !keep._3.contains(rel)
+        else (rel.endsWith(".parquet") && !keep._1.contains(rel)) ||
+          (n.startsWith("deletion_vector_") && n.endsWith(".bin") &&
+            !keep._2.contains(n))
+      }
+    }
+    def check(name: String, t: String, retain: Int): Unit = {
+      (1 to DeltaLite.versions(spark, t).size).foreach { r =>
+        assert(DeltaLite.vacuumKeep(spark, t, r) == union(t, r),
+          s"$name: keep-set differs at RETAIN $r VERSIONS")
+      }
+      val want = victimsOf(t, union(t, retain))
+      val got = DeltaLite.vacuum(spark, t, retain)
+      assert(got.toSet == want && got.size == want.size,
+        s"$name: victims $got, per-version union gives $want")
+    }
+    val dv = newTable()
+    DeltaLite.commit(spark, dv, (0L until 30L).toDF("k")
+      .repartitionByRange(2, col("k")))                               // v0
+    DeltaLite.deleteVectors(spark, dv, Seq(1L, 2L).toDF("k"), Seq("k")) // v1
+    DeltaLite.deleteVectors(spark, dv, Seq(3L).toDF("k"), Seq("k"))     // v2: extends v1's DV
+    DeltaLite.deleteVectors(spark, dv, Seq(25L).toDF("k"), Seq("k"))    // v3
+    check("DV extension", dv, retain = 2)
+    assert(DeltaLite.read(spark, dv).count() == 26L)
+
+    val readd = newTable()
+    DeltaLite.commit(spark, readd, Seq((1L, "a")).toDF("k", "s"))         // v0
+    DeltaLite.commit(spark, readd, Seq((2L, "b")).toDF("k", "s"),
+      overwrite = true)                                                   // v1
+    DeltaLite.restore(spark, readd, 0L)                                   // v2 re-adds v0's path
+    DeltaLite.commit(spark, readd, Seq((3L, "c")).toDF("k", "s"))         // v3
+    check("re-added path", readd, retain = 2)
+    assert(DeltaLite.read(spark, readd).select("k").as[Long].collect().toSet
+      == Set(1L, 3L))
+
+    val gone = newTable()
+    DeltaLite.commit(spark, gone, Seq((1L, "a")).toDF("k", "s"))          // v0
+    DeltaLite.commit(spark, gone, Seq((2L, "b")).toDF("k", "s"),
+      overwrite = true)                                                   // v1
+    DeltaLite.vacuum(spark, gone, 1)            // v0's file leaves the disk
+    DeltaLite.commit(spark, gone, Seq((3L, "c")).toDF("k", "s"))          // v2
+    DeltaLite.commit(spark, gone, Seq((4L, "d")).toDF("k", "s"),
+      overwrite = true)                                                   // v3
+    check("removed then vacuumed", gone, retain = 4)
+    check("removed then vacuumed, tip only", gone, retain = 1)
+
+    val hive = newTable()
+    DeltaLite.commit(spark, hive, (0L until 30L)
+      .map(k => (k, (k % 3).toString, s"p$k")).toDF("id", "bucket", "payload"),
+      partitionBy = Seq("bucket"))                                        // v0
+    DeltaLite.selectiveDelete(spark, hive, Seq(4L).toDF("id"), Seq("id")) // v1
+    DeltaLite.commit(spark, hive, Seq((100L, "1", "x"))
+      .toDF("id", "bucket", "payload"))                                   // v2
+    check("hive-partitioned", hive, retain = 2)
+    assert(DeltaLite.read(spark, hive).count() == 30L)
+
+    val cdf = newTable()
+    DeltaLite.commit(spark, cdf, (0L until 10L).map(k => (k, "base"))
+      .toDF("k", "s").repartitionByRange(2, col("k")))                   // v0
+    DeltaLite.setTableProperty(spark, cdf, DeltaLite.CdfProperty, "true") // v1
+    DeltaLite.selectiveMerge(spark, cdf, Seq((2L, "u1")).toDF("k", "s"),
+      Seq("k"))                                                           // v2 + cdc
+    DeltaLite.selectiveMerge(spark, cdf, Seq((3L, "u2")).toDF("k", "s"),
+      Seq("k"))                                                           // v3 + cdc
+    check("CDF-enabled", cdf, retain = 2)
+    assert(DeltaLite.read(spark, cdf).count() == 10L)
+  }
 }

@@ -161,4 +161,132 @@ class DeltaV2CheckpointSpec extends SparkSpec {
       "SELECT 3L AS k, TIMESTAMP_NTZ'2025-01-01 00:00:00' AS ts"))
     assert(DeltaLite.read(spark, t).count() == 3L)
   }
+
+  /** Spark jobs `body` starts, counted under its own job group once the
+    * listener bus has gone quiet (job-start events arrive async). */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "count jobs", interruptOnCancel = false)
+    val out = try body finally sc.clearJobGroup()
+    var last = -1
+    var same = 0
+    while (same < 3) {
+      Thread.sleep(200)
+      val n = sc.statusTracker.getJobIdsForGroup(group).length
+      if (n == last) same += 1 else { same = 0; last = n }
+    }
+    (out, last)
+  }
+
+  /** The same table's snapshot replayed from its JSON commits alone: a
+    * copy of the commit files, no checkpoint, no `_last_checkpoint`. */
+  private def jsonReplay(t: String): DeltaLite.Snapshot = {
+    val copy = newTable()
+    val dst = Files.createDirectories(Paths.get(copy, "_delta_log"))
+    new java.io.File(t, "_delta_log").listFiles()
+      .filter(_.getName.matches("\\d{20}\\.json"))
+      .foreach(f => Files.copy(f.toPath, dst.resolve(f.getName)))
+    DeltaLite.snapshot(spark, copy)
+  }
+
+  private def fields(s: DeltaLite.Snapshot): Seq[(String, Any)] = Seq(
+    "version" -> s.version, "schemaJson" -> s.schemaJson,
+    "files" -> s.files.sorted, "stats" -> s.stats, "dvs" -> s.dvs,
+    "partitionValues" -> s.partitionValues, "rowIds" -> s.rowIds,
+    "txns" -> s.txns, "domainMetadata" -> s.domainMetadata,
+    "configuration" -> s.configuration,
+    "partitionColumns" -> s.partitionColumns,
+    "minReaderVersion" -> s.minReaderVersion,
+    "readerFeatures" -> s.readerFeatures,
+    "minWriterVersion" -> s.minWriterVersion,
+    "writerFeatures" -> s.writerFeatures)
+
+  test("checkpoint bootstrap equals JSON replay field by field, in one " +
+    "Spark job (classic) or at most two (V2)") {
+    // (what the table covers, how to build it)
+    val fixtures: Seq[(String, String => Unit)] = Seq(
+      "deletion vectors + row tracking + txn + domain" -> { t =>
+        DeltaLite.commit(spark, t,
+          (0L until 40L).map(k => (k, s"v$k")).toDF("k", "s")
+            .repartitionByRange(4, col("k")))                      // v0
+        DeltaLite.enableRowTracking(spark, t)  // delta.rowTracking domain
+        DeltaLite.deleteVectors(spark, t, Seq(3L, 4L).toDF("k"), Seq("k"))
+        DeltaLite.commit(spark, t, Seq((100L, "x")).toDF("k", "s"),
+          txn = Some(("app-1", 7L)))
+      },
+      "column mapping" -> { t =>
+        DeltaLite.commit(spark, t,
+          (0L until 20L).map(k => (k, s"v$k")).toDF("id", "payload")
+            .repartitionByRange(2, col("id")), columnMapping = true)
+        DeltaLite.deleteVectors(spark, t, Seq(5L).toDF("id"), Seq("id"))
+      },
+      "partition columns + txn" -> { t =>
+        DeltaLite.commit(spark, t,
+          (0L until 20L).map(k => (k, s"b${k % 3}", s"p$k"))
+            .toDF("id", "bucket", "payload"), partitionBy = Seq("bucket"))
+        DeltaLite.commit(spark, t, Seq((50L, "b9", "x"))
+          .toDF("id", "bucket", "payload"), txn = Some(("app-2", 3L)))
+      })
+    for ((name, build) <- fixtures; v2 <- Seq(false, true)) {
+      val t = newTable()
+      build(t)
+      if (v2) DeltaLite.checkpointV2(spark, t) else DeltaLite.checkpoint(spark, t)
+      val (viaCp, jobs) = jobsOf(DeltaLite.snapshot(spark, t))
+      val flavor = if (v2) "V2" else "classic"
+      assert(jobs == (if (v2) 2 else 1),
+        s"$name, $flavor: snapshot started $jobs Spark jobs")
+      val viaJson = jsonReplay(t)
+      fields(viaCp).zip(fields(viaJson)).foreach { case ((k, got), (_, want)) =>
+        assert(got == want, s"$name, $flavor: $k differs")
+      }
+    }
+  }
+
+  test("a foreign-shaped checkpoint (no txn or domainMetadata columns, " +
+    "no protocol features) bootstraps in one job") {
+    val t = newTable()
+    DeltaLite.commit(spark, t, Seq((1L, "a"), (2L, "b")).toDF("k", "s")) // v0
+    DeltaLite.commit(spark, t, Seq((3L, "c")).toDF("k", "s"))            // v1
+    val s1 = DeltaLite.snapshot(spark, t)
+    // the shape a foreign engine writes: its own add/remove/metaData/
+    // protocol columns only, plus a remove tombstone that must not count
+    val rows = s1.files.map(p => (Option(p), s1.stats.get(p), Option.empty[String])) :+
+      ((None, None, Some("gone.parquet"))) :+ ((None, None, None))
+    val cpDir = Files.createTempDirectory("graft_foreign_cp").toString + "/cp"
+    rows.toDF("path", "stats", "tomb").selectExpr(
+      """IF(path IS NULL, NULL, named_struct('path', path,
+        |  'partitionValues', map(), 'size', 1L, 'modificationTime', 0L,
+        |  'dataChange', false, 'stats', stats)) AS add""".stripMargin,
+      """IF(tomb IS NULL, NULL, named_struct('path', tomb,
+        |  'deletionTimestamp', 0L, 'dataChange', false)) AS remove""".stripMargin,
+      s"""IF(path IS NULL AND tomb IS NULL, named_struct('id', 'foreign',
+         |  'format', named_struct('provider', 'parquet'),
+         |  'schemaString', '${s1.schemaJson.get}',
+         |  'partitionColumns', array(),
+         |  'configuration', map('delta.appendOnly', 'false'),
+         |  'createdTime', 0L), NULL) AS metaData""".stripMargin,
+      """IF(path IS NULL AND tomb IS NULL, named_struct(
+        |  'minReaderVersion', 1, 'minWriterVersion', 2), NULL)
+        |  AS protocol""".stripMargin)
+      .coalesce(1).write.parquet(cpDir)
+    val part = new java.io.File(cpDir).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    Files.copy(part.toPath,
+      Paths.get(t, "_delta_log", f"${1L}%020d.checkpoint.parquet"))
+    Files.write(Paths.get(t, "_delta_log", "_last_checkpoint"),
+      """{"version":1,"size":5}""".getBytes("UTF-8"))
+    Files.delete(Paths.get(t, "_delta_log", f"${0L}%020d.json"))
+    val (s, jobs) = jobsOf(DeltaLite.snapshot(spark, t))
+    assert(s.files.sorted == s1.files.sorted && s.stats == s1.stats)
+    assert(s.schemaJson == s1.schemaJson)
+    assert(s.configuration == Map("delta.appendOnly" -> "false"))
+    assert(s.minReaderVersion == 1 && s.minWriterVersion == 2)
+    assert(s.readerFeatures.isEmpty && s.writerFeatures.isEmpty)
+    assert(s.txns.isEmpty && s.domainMetadata.isEmpty && s.dvs.isEmpty &&
+      s.rowIds.isEmpty && s.partitionValues.isEmpty &&
+      s.partitionColumns.isEmpty)
+    assert(DeltaLite.read(spark, t).count() == 3L)
+    assert(jobs == 1, s"snapshot started $jobs Spark jobs")
+  }
 }

@@ -87,6 +87,31 @@ class HarnessSpec extends SparkSpec {
     assert(deg3)
   }
 
+  test("degraded verdict sees I/O contention and keeps a float busy bar " +
+    "on small hosts") {
+    val snap = Bench.hostSnap()
+    assert(snap.iowaitTicks >= 0 && snap.blocked >= 0,
+      "iowait ticks and procs_blocked must be read from /proc/stat")
+    val quiet = Bench.HostSnap(0.2, 0.5, 1.0, 1, 100, 100000, 50, 0)
+    val post = Bench.HostSnap(3.0, 1.0, 0.5, 5, 100, 200000, 60, 0)
+    assert(!Bench.hostJson(quiet, None, post, 4)._2)
+    // an I/O-saturated window: load1 counts the D-state tasks, runnable
+    // does not, and iowait takes 8% of the window's ticks
+    val ioPre = quiet.copy(load1 = 6.0, runnable = 1)
+    val ioPost = post.copy(iowaitTicks = 50 + 8000)
+    val (json, degIo) = Bench.hostJson(ioPre, None, ioPost, 32)
+    assert(degIo, "high load1 + low runnable + high iowait is contention")
+    assert(json.contains("\"iowait_pct\":8.0"), json)
+    // blocked tasks above the busy bar flag on their own
+    assert(Bench.hostJson(quiet.copy(blocked = 9), None, post, 32)._2)
+    assert(!Bench.hostJson(quiet.copy(blocked = 2), None, post, 32)._2)
+    // 4 cores: the busy bar is max(2, 4/4) = 2, so a single runnable task
+    // beside the sampler does not flip the label; three do
+    val busy4 = quiet.copy(load1 = 2.5)
+    assert(!Bench.hostJson(busy4.copy(runnable = 2), None, post, 4)._2)
+    assert(Bench.hostJson(busy4.copy(runnable = 3), None, post, 4)._2)
+  }
+
   test("trimmed per-query map: slowest-first, budget-bounded, parseable") {
     // r20 verdict item 2: the driver's ~2000-char tail parser got
     // "queries":"see_full_artifact" and PERF computed nothing per-query.
